@@ -27,6 +27,7 @@ collect.
 from __future__ import annotations
 
 import math
+from dataclasses import replace
 
 import pandas as pd
 
@@ -130,60 +131,6 @@ class FedexExplainer(ExplainerBase):
             out = out.transform(checkpoint_df)
         return out
 
-    def _profile_and_corr(
-        self, df: DataFrame, anchor: str | None, candidates: list[str]
-    ) -> tuple[dict[str, ColumnProfile], dict[str, float]]:
-        """ONE aggregation pass computing BOTH the column profiles
-        (approx distinct + min/max) and the |corr| pruning against the
-        filter attribute — previously two separate full scans of the
-        source (the second-largest cost of fedex_filter at sf0.1 after
-        the histogram itself)."""
-        schema = {f.name: f.dataType for f in df.schema.fields}
-        anchor_numeric = (
-            anchor is not None and anchor in schema and is_numeric_type(schema[anchor])
-        )
-        numeric_cands = [
-            c for c in candidates if is_numeric_type(schema[c]) and c != anchor
-        ]
-        exprs = []
-        for c in candidates:
-            exprs.append(F.approx_count_distinct(c).alias(f"{c}__d"))
-            if is_numeric_type(schema[c]):
-                exprs.append(F.min(c).cast("double").alias(f"{c}__lo"))
-                exprs.append(F.max(c).cast("double").alias(f"{c}__hi"))
-        if anchor_numeric:
-            exprs += [
-                F.corr(F.col(anchor).cast("double"), F.col(c).cast("double")).alias(
-                    f"{c}__corr"
-                )
-                for c in numeric_cands
-            ]
-        if not exprs:
-            return {}, {}
-        row = df.agg(*exprs).first().asDict()
-        corr = {
-            c: float(row[f"{c}__corr"])
-            for c in numeric_cands
-            if anchor_numeric
-            and row.get(f"{c}__corr") is not None
-            and abs(row[f"{c}__corr"]) >= self.corr_TH
-        }
-        profiles: dict[str, ColumnProfile] = {}
-        cat_cap = 60  # mirrors profile_columns' default
-        for c in candidates:
-            if c in corr:
-                continue
-            distinct = row[f"{c}__d"] or 0
-            numeric_dtype = is_numeric_type(schema[c])
-            is_num = numeric_dtype and distinct > 6
-            prof = ColumnProfile(name=c, is_numeric=is_num, distinct=distinct)
-            if numeric_dtype:
-                prof.vmin, prof.vmax = row.get(f"{c}__lo"), row.get(f"{c}__hi")
-            if not is_num and distinct > cat_cap:
-                continue
-            profiles[c] = prof
-        return profiles, corr
-
     def _explain_filter(self) -> Explanation:
         op: FilterOp = self.op
         source = self._maybe_sample(op.source)
@@ -217,7 +164,13 @@ class FedexExplainer(ExplainerBase):
         # the lazily persisted projection (blocks otherwise linger until
         # the ContextCleaner gets around to them — r12 VERDICT wart #4)
         try:
-            profiles, corr = self._profile_and_corr(source, op.attribute, candidates)
+            profiles = profile_columns(source, candidates, corr_anchor=op.attribute)
+            # columns correlated with the filter attribute are pruned
+            corr = {
+                c: p.corr for c, p in profiles.items()
+                if p.corr is not None and abs(p.corr) >= self.corr_TH
+            }
+            profiles = {c: p for c, p in profiles.items() if c not in corr}
             if not profiles:
                 return Explanation(kind="fedex-filter", query=op.query_string())
             hist = dual_histogram_predicate(
@@ -399,30 +352,7 @@ class FedexExplainer(ExplainerBase):
                     raise ValueError("shapley filter mode needs a numeric `attr`")
                 attr = numerics[0]
         agg = (self.value or "mean").lower()
-        if agg not in ("mean", "sum", "count"):
-            raise ValueError(f"shapley filter value must be mean/sum/count, got {agg!r}")
-        pred = op.predicate.to_spark(source)
-        v = F.col(attr).cast("double")
-        row = source.agg(
-            F.sum(F.when(pred, v)).alias("sm_k"),
-            F.count(F.when(pred, v)).alias("nn_k"),
-            F.sum(F.when(~pred, v)).alias("sm_r"),
-            F.count(F.when(~pred, v)).alias("nn_r"),
-        ).first()
-        sm_k, nn_k = float(row["sm_k"] or 0.0), float(row["nn_k"] or 0)
-        sm_r, nn_r = float(row["sm_r"] or 0.0), float(row["nn_r"] or 0)
-
-        def val(sm: float, nn: float) -> float:
-            if agg == "sum":
-                return sm
-            if agg == "count":
-                return nn
-            return sm / nn if nn else 0.0
-
-        v_kept, v_removed = val(sm_k, nn_k), val(sm_r, nn_r)
-        v_all = val(sm_k + sm_r, nn_k + nn_r)
-        phi_kept = 0.5 * v_kept + 0.5 * (v_all - v_removed)
-        phi_removed = 0.5 * v_removed + 0.5 * (v_all - v_kept)
+        shapley = _shapley_filter(source, op.predicate.to_spark(source), attr, agg)
         base = self._explain_filter()
         exp = Explanation(
             kind="fedex-shapley-filter",
@@ -431,14 +361,7 @@ class FedexExplainer(ExplainerBase):
             scores=base.scores,
         )
         exp.extras["cor_deleted_atts"] = base.extras.get("cor_deleted_atts", {})
-        exp.extras["shapley"] = {
-            "measure": f"{agg}({attr})",
-            "kept": phi_kept,
-            "removed": phi_removed,
-            "v_all": v_all,
-            "v_kept": v_kept,
-            "v_removed": v_removed,
-        }
+        exp.extras["shapley"] = {"measure": f"{agg}({attr})", **shapley}
         return exp
 
     # ------------------------------------------------------------------
@@ -638,30 +561,16 @@ def filter_kernel_table(
     if not isinstance(op, FilterOp) or op.predicate is None:
         raise ValueError("filter_kernel_table needs a frame produced by a tracked filter")
     source = op.source
-    profiles = _exact_numeric_profiles(source, attributes, n_bins)
+    profiles = _forced_numeric(profile_columns(source, attributes), attributes)
     hist = dual_histogram_predicate_df(source, op.predicate.to_spark(source), profiles, n_bins)
     return _cum_delta_table(hist)
 
 
-def _exact_numeric_profiles(df: DataFrame, attributes: list[str], n_bins: int):
-    """Exact min/max profiles for an explicit numeric attribute list —
-    no approx-distinct candidate rule, so bin edges are reproducible in
-    any engine from the same data."""
-    exprs: list = []
-    for c in attributes:
-        exprs.append(F.min(c).cast("double").alias(f"{c}__lo"))
-        exprs.append(F.max(c).cast("double").alias(f"{c}__hi"))
-    row = df.agg(*exprs).first().asDict()
-    return {
-        c: ColumnProfile(
-            name=c,
-            is_numeric=True,
-            distinct=n_bins,  # placeholder; bin_edges only needs vmin/vmax
-            vmin=row[f"{c}__lo"],
-            vmax=row[f"{c}__hi"],
-        )
-        for c in attributes
-    }
+def _forced_numeric(profiles: dict[str, ColumnProfile], attributes: list[str]):
+    """The kernel tables' explicit attribute lists are binned numerically
+    over their exact min/max — no distinct > 6 rule, so bin edges are
+    reproducible in any engine from the same data."""
+    return {c: replace(profiles[c], is_numeric=True) for c in attributes}
 
 
 def _cum_delta_table(hist: DataFrame) -> DataFrame:
@@ -707,7 +616,7 @@ def join_kernel_table(
     if not isinstance(op, JoinOp):
         raise ValueError("join_kernel_table needs a frame produced by a tracked join")
     side_df, side_name = (op.right, op.right_name) if consider == "right" else (op.left, op.left_name)
-    profiles = _exact_numeric_profiles(side_df, attributes, n_bins)
+    profiles = _forced_numeric(profile_columns(side_df, attributes), attributes)
     rename = {c: f"{side_name}_{c}" for c in attributes}
     hist = dual_histogram_union_df(side_df, op.result, profiles, n_bins, result_rename=rename)
     return _cum_delta_table(hist)
@@ -725,11 +634,25 @@ def shapley_filter_kernel_table(frame, attr: str, value: str = "mean") -> DataFr
     op = frame.operation
     if not isinstance(op, FilterOp) or op.predicate is None:
         raise ValueError("shapley_filter_kernel_table needs a tracked filter")
-    agg = value.lower()
-    if agg not in ("mean", "sum", "count"):
-        raise ValueError(f"value must be mean/sum/count, got {value!r}")
     source = op.source
-    pred = op.predicate.to_spark(source)
+    s = _shapley_filter(source, op.predicate.to_spark(source), attr, value.lower())
+    return source.sparkSession.createDataFrame(
+        [
+            ("kept", round(s["v_kept"], 6), round(s["kept"], 6)),
+            ("removed", round(s["v_removed"], 6), round(s["removed"], 6)),
+        ],
+        schema="player string, value double, shapley double",
+    )
+
+
+def _shapley_filter(source: DataFrame, pred, attr: str, agg: str) -> dict[str, float]:
+    """Exact 2-player Shapley over the {kept, removed} row partitions of
+    ``source`` under ``pred`` for the measure ``agg(attr)``, from ONE
+    conditional-aggregation pass. With v(S) = agg over the rows of S and
+    v(empty) = 0: phi(kept) = 0.5*v(kept) + 0.5*(v(all) - v(removed)),
+    and symmetrically for removed."""
+    if agg not in ("mean", "sum", "count"):
+        raise ValueError(f"shapley filter value must be mean/sum/count, got {agg!r}")
     v = F.col(attr).cast("double")
     row = source.agg(
         F.sum(F.when(pred, v)).alias("sm_k"),
@@ -749,13 +672,10 @@ def shapley_filter_kernel_table(frame, attr: str, value: str = "mean") -> DataFr
 
     v_kept, v_removed = val(sm_k, nn_k), val(sm_r, nn_r)
     v_all = val(sm_k + sm_r, nn_k + nn_r)
-    phi_kept = 0.5 * v_kept + 0.5 * (v_all - v_removed)
-    phi_removed = 0.5 * v_removed + 0.5 * (v_all - v_kept)
-    spark = source.sparkSession
-    return spark.createDataFrame(
-        [
-            ("kept", round(v_kept, 6), round(phi_kept, 6)),
-            ("removed", round(v_removed, 6), round(phi_removed, 6)),
-        ],
-        schema="player string, value double, shapley double",
-    )
+    return {
+        "kept": 0.5 * v_kept + 0.5 * (v_all - v_removed),
+        "removed": 0.5 * v_removed + 0.5 * (v_all - v_kept),
+        "v_all": v_all,
+        "v_kept": v_kept,
+        "v_removed": v_removed,
+    }

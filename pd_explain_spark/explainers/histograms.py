@@ -1,4 +1,18 @@
-"""Single-pass dual-histogram service (SURVEY.md §4 custom-physical #1).
+"""Column profiles and the single-pass dual-histogram service (SURVEY.md
+§4 custom-physical #1).
+
+``profile_columns`` is the ONE profile pass of every explainer: a single
+aggregate computing approx distinct + min/max per column (and, with
+``corr_anchor``, the correlation of every numeric column with the
+anchor). Its callers read it two ways:
+ * ``is_numeric`` (the reference's rule, numeric dtype AND nunique > 6,
+   metainsight_explainer.py:509-510) picks numeric bins vs categories —
+   the FEDEX filter/join/shapley explainers, many-to-one and
+   MetaInsight;
+ * raw ``vmin``/``vmax`` with no distinct gate — the outlier explainer
+   (a few-valued numeric attribute must still be binned) and the
+   oracle kernel tables ``filter_kernel_table``/``join_kernel_table``
+   (which force ``is_numeric`` on their explicit attribute lists).
 
 The reference's FEDEX kernel loops per column in pandas; here ONE Spark
 job computes (column, bin) -> (source_count, result_count) for every
@@ -16,10 +30,10 @@ Two flavors:
    each row once for src and conditionally for res — zero extra I/O.
  * union path (joins / arbitrary result): source tagged 0, result tagged 1.
 
-Binning: numeric columns (nunique > 6, the reference's rule,
-metainsight_explainer.py:509-510) get equi-width bins from a profile
-pass; everything else low-cardinality is its own category; very
-high-cardinality strings are skipped (reference caps categories too).
+Binning: numeric columns get equi-width bins (``bin_index``, shared with
+the outlier explainer) over the profiled range; everything else
+low-cardinality is its own category; very high-cardinality strings are
+skipped (reference caps categories too).
 """
 
 from __future__ import annotations
@@ -42,6 +56,7 @@ class ColumnProfile:
     distinct: int
     vmin: float | None = None
     vmax: float | None = None
+    corr: float | None = None  # corr(corr_anchor, column); numeric columns only
 
     def bin_edges(self, n_bins: int) -> list[float] | None:
         if not self.is_numeric or self.vmin is None or self.vmax is None:
@@ -52,29 +67,64 @@ class ColumnProfile:
         return [lo + (hi - lo) * i / n_bins for i in range(n_bins + 1)]
 
 
-def profile_columns(df: DataFrame, columns: list[str], cat_cap: int = 60) -> dict[str, ColumnProfile]:
-    """ONE aggregation computing approx distinct + min/max for all columns."""
+def profile_columns(
+    df: DataFrame,
+    columns: list[str],
+    cat_cap: int = 60,
+    corr_anchor: str | None = None,
+) -> dict[str, ColumnProfile]:
+    """ONE aggregation computing approx distinct + min/max for all columns.
+
+    With a numeric ``corr_anchor``, the same aggregate also computes
+    ``corr(anchor, c)`` for every other numeric column into
+    ``ColumnProfile.corr``. No columns -> ``{}`` without a Spark job."""
+    if not columns:
+        return {}
     schema = {f.name: f.dataType for f in df.schema.fields}
+    numeric = {c for c in columns if is_numeric_type(schema[c])}
     exprs: list[Column] = []
     for c in columns:
         exprs.append(F.approx_count_distinct(c).alias(f"{c}__d"))
-        if is_numeric_type(schema[c]):
+        if c in numeric:
             exprs.append(F.min(c).cast("double").alias(f"{c}__lo"))
             exprs.append(F.max(c).cast("double").alias(f"{c}__hi"))
+    corr_cols: list[str] = []
+    if corr_anchor in schema and is_numeric_type(schema[corr_anchor]):
+        corr_cols = [c for c in columns if c in numeric and c != corr_anchor]
+        anchor = F.col(corr_anchor).cast("double")
+        exprs += [F.corr(anchor, F.col(c).cast("double")).alias(f"{c}__corr") for c in corr_cols]
     row = df.agg(*exprs).first().asDict()
     out: dict[str, ColumnProfile] = {}
     for c in columns:
         distinct = row[f"{c}__d"] or 0
-        numeric_dtype = is_numeric_type(schema[c])
         # the reference's rule: numeric treatment iff numeric dtype AND nunique > 6
-        is_num = numeric_dtype and distinct > 6
+        is_num = c in numeric and distinct > 6
         prof = ColumnProfile(name=c, is_numeric=is_num, distinct=distinct)
-        if numeric_dtype:
-            prof.vmin, prof.vmax = row.get(f"{c}__lo"), row.get(f"{c}__hi")
+        if c in numeric:
+            prof.vmin, prof.vmax = row[f"{c}__lo"], row[f"{c}__hi"]
+        if c in corr_cols and row[f"{c}__corr"] is not None:
+            prof.corr = float(row[f"{c}__corr"])
         if not is_num and distinct > cat_cap:
             continue  # high-cardinality categorical: skip (ref caps categories)
         out[c] = prof
     return out
+
+
+def bin_index(v: Column, lo: float, hi: float, n_bins: int) -> Column:
+    """Equi-width bin index of ``v`` over [lo, hi], clamped to
+    [0, n_bins - 1]. Callers map a null ``v`` to their own null key.
+
+    Single-expression form ((v - lo) * n) / (hi - lo): every term is one
+    IEEE op on the exact min/max doubles, so an external SQL engine
+    evaluating the same expression assigns identical bins — no
+    pre-computed width constant that could differ by an ulp."""
+    return F.least(
+        F.lit(n_bins - 1),
+        F.greatest(
+            F.lit(0),
+            F.floor((v.cast("double") - F.lit(lo)) * F.lit(n_bins) / F.lit(hi - lo)),
+        ),
+    )
 
 
 def _bin_expr(df: DataFrame, prof: ColumnProfile, n_bins: int) -> Column:
@@ -88,18 +138,7 @@ def _bin_expr_col(c: Column, prof: ColumnProfile, n_bins: int) -> Column:
     index keeps lexical == numeric order)."""
     edges = prof.bin_edges(n_bins)
     if prof.is_numeric and edges is not None:
-        # single-expression bin index ((v - lo) * n) / (hi - lo): every term
-        # is one IEEE op on the exact min/max doubles, so an external SQL
-        # engine evaluating the same expression assigns identical bins —
-        # no pre-computed width constant that could differ by an ulp
-        lo, hi = float(prof.vmin), float(prof.vmax)
-        idx = F.least(
-            F.lit(n_bins - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((c.cast("double") - F.lit(lo)) * F.lit(n_bins) / F.lit(hi - lo)),
-            ),
-        )
+        idx = bin_index(c, float(prof.vmin), float(prof.vmax), n_bins)
         return F.when(c.isNull(), F.lit(NULL_TOKEN)).otherwise(F.lpad(idx.cast("string"), 4, "0"))
     return F.coalesce(c.cast("string"), F.lit(NULL_TOKEN))
 

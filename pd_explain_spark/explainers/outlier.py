@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from ..core.operations import GroupByOp
 from ..operators.aggregates import is_numeric_type
 from .base import Explanation, ExplanationItem, ExplainerBase
+from .histograms import bin_index, profile_columns
 
 N_BINS = 30
 MAX_ATTRS = 10
@@ -114,41 +115,14 @@ class OutlierExplainer(ExplainerBase):
         ]
         return attrs[: self.max_attrs]
 
-    def _profile_ranges(self, src, attrs):
-        """Min/max profile pass; returns (ranges, raw profile row)."""
-        prof_exprs = []
-        prof_cols = attrs + ([self.g_agg] if self.agg_method == "median" else [])
-        for a in prof_cols:
-            prof_exprs += [
-                F.min(F.col(a).cast("double")).alias(f"{a}__lo"),
-                F.max(F.col(a).cast("double")).alias(f"{a}__hi"),
-            ]
-        prof = src.agg(*prof_exprs).first().asDict()
-        ranges = {}
-        for a in attrs:
-            lo, hi = prof[f"{a}__lo"], prof[f"{a}__hi"]
-            if lo is None or hi is None or hi <= lo:
-                continue
-            ranges[a] = (float(lo), float(hi))
-        return ranges, prof
-
     def _exploded_base(self, src, ranges):
         """Shared select list for the single partials pass: group key,
         exploded (attr, bin) structs, the measure. Bin index is the
-        single-expression form ((v - lo) * n) / (hi - lo) — one IEEE op per
-        term on the exact min/max doubles, so an external SQL engine
+        FEDEX histograms' ``bin_index``, so an external SQL engine
         evaluating the same expression assigns identical bins."""
         structs = []
         for a, (lo, hi) in ranges.items():
-            idx = F.least(
-                F.lit(self.n_bins - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor(
-                        (F.col(a).cast("double") - F.lit(lo)) * F.lit(self.n_bins) / F.lit(hi - lo)
-                    ),
-                ),
-            )
+            idx = bin_index(F.col(a), lo, hi, self.n_bins)
             bin_key = F.when(F.col(a).isNull(), F.lit(-1)).otherwise(idx).cast("int")
             structs.append(F.struct(F.lit(a).alias("attr"), bin_key.alias("bin")))
         v = F.col(self.g_agg).cast("double")
@@ -181,16 +155,18 @@ class OutlierExplainer(ExplainerBase):
         if not attrs:
             return Explanation(kind="outlier", query=self.op.query_string())
 
-        ranges, prof = self._profile_ranges(src, attrs)
+        median = self.agg_method == "median"
+        profiles = profile_columns(src, attrs + ([self.g_agg] if median else []))
+        ranges = _bin_ranges(profiles, attrs)
         if not ranges:
             return Explanation(kind="outlier", query=self.op.query_string())
 
         v, base_cols, group_cols = self._exploded_base(src, ranges)
-        if self.agg_method == "median":
-            alo, ahi = prof[f"{self.g_agg}__lo"], prof[f"{self.g_agg}__hi"]
-            if alo is None or ahi is None:
+        if median:
+            agg_prof = profiles.get(self.g_agg)
+            if agg_prof is None or agg_prof.vmin is None or agg_prof.vmax is None:
                 return Explanation(kind="outlier", query=self.op.query_string())
-            alo, ahi = float(alo), float(ahi)
+            alo, ahi = float(agg_prof.vmin), float(agg_prof.vmax)
             awidth = (ahi - alo) / MEDIAN_HIST_BINS or 1.0
             self._agg_hist = (alo, awidth)
             abin = F.when(
@@ -442,6 +418,19 @@ class OutlierExplainer(ExplainerBase):
         return self._finish(best, std_int_before, groups, base_vals, t_idx, ranges, best_after)
 
 
+def _bin_ranges(profiles, attrs) -> dict[str, tuple[float, float]]:
+    """(lo, hi) per attribute with a non-empty profiled range. No
+    distinct > 6 gate (unlike the FEDEX numeric rule): a numeric
+    attribute with few values must still be binned."""
+    ranges = {}
+    for a in attrs:
+        p = profiles.get(a)
+        if p is None or p.vmin is None or p.vmax is None or p.vmax <= p.vmin:
+            continue
+        ranges[a] = (float(p.vmin), float(p.vmax))
+    return ranges
+
+
 def outlier_kernel_table(
     frame,
     target,
@@ -468,7 +457,7 @@ def outlier_kernel_table(
     explainer = OutlierExplainer(frame, target=target, dir=dir, n_bins=n_bins)
     src = explainer.op.source
     attrs = attributes or explainer._candidate_attrs(src)
-    ranges, _ = explainer._profile_ranges(src, attrs)
+    ranges = _bin_ranges(profile_columns(src, attrs), attrs)
     if not ranges:
         raise ValueError(f"no binnable numeric attributes among {attrs!r}")
     partials = explainer._attr_partials(src, ranges)

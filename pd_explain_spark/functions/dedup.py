@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import fan_out
 from ..session import checkpoint_df
 from .hashing import md5_int
 from .text import normalized_text
@@ -137,7 +138,7 @@ def _shingle_index(
     (side, id, shingle), i.e. per-side distinct of a tagged union.
     """
     extra = [F.col(side_col)] if side_col else []
-    toks_df = _fan_out(
+    toks_df = fan_out(
         df.select(
             *extra,
             F.col(id_col).alias("id"),
@@ -198,24 +199,6 @@ def _two_side_shingle_index(
     new_inv = inv_all.filter(F.col("__new")).select("id", "shingle")
     corp_inv = inv_all.filter(~F.col("__new")).select("id", "shingle")
     return new_inv, corp_inv
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition iff the input is narrower than the cluster.
-
-    Small parquet files arrive as 1-2 partitions; CPU-heavy per-row work
-    (hashing every shingle/token) would then run on one thread. On a real
-    cluster a 100 TB scan is already wide, so this is a no-op there — the
-    check makes the shuffle conditional, not unconditional.
-    """
-    if df.isStreaming:
-        # no .rdd on a streaming frame; micro-batch parallelism is the
-        # source's concern (maxFilesPerTrigger etc.), not a repartition
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # ---------------------------------------------------------------- exact jaccard
@@ -1599,7 +1582,7 @@ def simhash_signatures(
         if hash_fn == "xxhash64"
         else md5_int(F.md5(F.col("tok")))
     )
-    inv = _fan_out(df).select(
+    inv = fan_out(df).select(
         F.col(id_col).alias("id"), F.explode(toks).alias("tok")
     ).select("id", h.alias("h"))
     # codegen'd sum aggregates (map-side combined): vote[b] = sum over
@@ -1914,7 +1897,7 @@ def winnow_fingerprint_index(
     selection reproduces verbatim in DuckDB (list_min over slices)."""
     if k < 1 or window < 1:
         raise ValueError("winnow_fingerprint_index: k and window must be >= 1")
-    toks_df = _fan_out(
+    toks_df = fan_out(
         df.select(
             F.col(id_col).alias("id"),
             F.split(normalized_text(F.col(text_col)), " ").alias("toks"),

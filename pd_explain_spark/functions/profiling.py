@@ -15,6 +15,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import fan_out
+
 
 def key_skew_report(
     df: DataFrame,
@@ -110,9 +112,7 @@ def table_profile(
     # the scan stage; spread a low-parallelism input first so the
     # expansion runs session-wide instead of inside one file split
     # (no-op at cluster scan parallelism — guide §2.2)
-    from ..session import spread_input
-
-    row = spread_input(df.select(*[_qcol(c) for c in cols])).agg(*aggs)
+    row = fan_out(df.select(*[_qcol(c) for c in cols])).agg(*aggs)
     per_col = row.select(
         F.col("__n"),
         F.explode(
@@ -961,14 +961,12 @@ def bootstrap_mean_ci(
 
     from pyspark.sql import Window
 
-    from ..session import spread_input
-
     # the explode below multiplies per-row work n_boot/2-fold (one md5
     # per (row, digest) pair is the dominant cost); spread a
     # low-parallelism input across the session's cores first — no-op
     # when the scan is already parallel (guide §2: partition by the
     # work, not the file layout)
-    base = spread_input(
+    base = fan_out(
         df.filter(F.col(col).isNotNull()).select(
             F.col(id_col).cast("string").alias("__id"),
             F.floor(F.col(col).cast("double") * F.lit(1000.0) + F.lit(0.5))

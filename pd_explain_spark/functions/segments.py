@@ -32,7 +32,7 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import spread_input
+from ..operators.partitioning import fan_out
 from .text import normalized_text
 
 __all__ = [
@@ -77,7 +77,7 @@ def _segment_table(
     scale); without it the whole segment pipeline inherits a small
     file's single-task layout (the scale_audit ``generate-on-raw-scan``
     finding)."""
-    return spread_input(df.select(id_col, text_col), id_col).select(
+    return fan_out(df.select(id_col, text_col), id_col).select(
         F.col(id_col), F.posexplode(segmenter(F.col(text_col))).alias("seg_pos", "segment")
     )
 

@@ -21,7 +21,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import checkpoint_df, spread_input
+from ..operators.partitioning import fan_out
+from ..session import checkpoint_df
 
 from .hashing import md5_int
 
@@ -342,7 +343,7 @@ def lsh_topk(
                  ("rank", "int"), ("cosine_sim", "double")],
             )
         dim = int(first[0])
-    # spread BEFORE the corpus filter (r12 ADVICE): spread_input probes
+    # spread BEFORE the corpus filter (r12 ADVICE): fan_out probes
     # df.rdd.getNumPartitions(), and under AQE that eagerly materializes
     # any upstream shuffle stage — an `allowed` semi join (or a computed
     # embedding pipeline) would run once for the probe and again in the
@@ -351,7 +352,7 @@ def lsh_topk(
     # listing), filters/semi-joins do not change partition count, and
     # Catalyst still pushes `where` through the RepartitionByExpression
     # into the parquet scan.
-    corpus = spread_input(corpus, id_col)
+    corpus = fan_out(corpus, id_col)
     corpus = _apply_corpus_filter(corpus, id_col, where, allowed)
     # norms ride along from before the explode — one norm per VECTOR,
     # not per (vector, table) row or per candidate pair; same doubles,
@@ -443,7 +444,7 @@ def embedding_near_duplicates(
     # partitioning. On a single-split scan all of that ran in one task
     # (measured: the whole entry core-scaled at only 1.35x). No-op at
     # cluster parallelism; projected to the two needed columns already.
-    spread = spread_input(base, "id")
+    spread = fan_out(base, "id")
     # persist: the self-join below references this frame on BOTH sides —
     # without it the (n_tables x n_planes)-literal bucket expression (a
     # ~100 KB plan subtree that alone costs seconds to analyze) is
@@ -988,8 +989,6 @@ def _settle_computed_input(df: DataFrame) -> DataFrame:
     except Exception:
         return df
     if any(k in plan for k in ("Aggregate", "Generate", "Join", "Window")):
-        from ..operators.partitioning import fan_out
-
         return checkpoint_df(fan_out(df))
     return df
 

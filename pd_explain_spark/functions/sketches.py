@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import fan_out
 from .hashing import md5_int
 from .text import ngrams_from_tokens, normalized_text
 
@@ -45,15 +46,13 @@ def _gram_occurrences(
     """One row per gram OCCURRENCE (duplicates kept — counting
     semantics, unlike the distinct-set ``_shingle_index`` in dedup).
 
-    Tokenization sits behind the ``_fan_out`` repartition barrier (the
+    Tokenization sits behind the ``fan_out`` repartition barrier (the
     _shingle_index recipe): without it, projection collapse inlines the
     split+filter into every n-gram slice — O(tokens^2) per doc,
     interpreted — and a small parquet arrives as ONE partition so the
     whole corpus tokenizes on a single thread (measured: the 3
     occurrence passes dominated cms_heavy_grams at 6.7 s each)."""
-    from .dedup import _fan_out
-
-    toks_df = _fan_out(
+    toks_df = fan_out(
         df.select(
             F.col(id_col).alias("id"),
             F.filter(
@@ -732,14 +731,12 @@ def exact_quantiles(
     # final distinct-value collect all consume `vals` — unpersisted,
     # every one re-executes whatever upstream pipeline produced df
     # (the ngram_jaccard_pairs persist rationale)
-    from ..session import spread_input
-
     vals = (
         # spread before persisting: the histogram passes below re-scan
         # this cache once per refinement round, and a single-split input
         # (one-row-group file) would pin every pass to one task — no-op
         # when the upstream is already parallel (guide §2.2)
-        spread_input(df.filter(F.col(col).isNotNull()).select(F.col(col).alias("v")))
+        fan_out(df.filter(F.col(col).isNotNull()).select(F.col(col).alias("v")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     stats = vals.agg(

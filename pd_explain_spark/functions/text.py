@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import fan_out
+
 # deliberately small + regex-safe; shared with the SQL oracle
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 STOPWORD_RE = r"\b(" + "|".join(STOPWORDS) + r")\b"
@@ -192,8 +194,6 @@ def repetition_signals(df: DataFrame, text_col: str = "text", id_col: str = "doc
     # collapse inlines the split into every transform element and the
     # n-gram pass goes O(tokens^2) interpreted per document (measured
     # 31 s -> ~3 s at sf0.1). Same pattern as dedup._shingle_index.
-    from ..operators.partitioning import fan_out
-
     toks_df = fan_out(
         df.select(F.col(id_col), F.split(normalized_text(c), " ").alias("__t"))
     )
@@ -823,10 +823,8 @@ def bigram_lm_scores(
         # collapse inlines the tokenization into every element —
         # O(tokens^2) per doc, interpreted (same trap _shingle_index
         # documents)
-        from .dedup import _fan_out
-
         cols = [F.col(id_col)] if keep_id else []
-        base = _fan_out(
+        base = fan_out(
             frame.select(
                 *cols, tokens(normalized_text(F.col(text_col))).alias("__t")
             )
@@ -901,16 +899,14 @@ def unigram_bigram_grams(
     classifier, and hashed_embeddings: their feature spaces must never
     drift apart.
 
-    The token array materializes behind the ``_fan_out`` repartition
+    The token array materializes behind the ``fan_out`` repartition
     barrier BEFORE the bigram lambda runs: the lambda reads ``toks``
     twice per position and the gram concat reads it again, so without
     the barrier projection collapse inlines the regex tokenization into
     every interpreted element_at — O(tokens^2) per doc (the _shingle_
     index / lm2 trap; losing this barrier in the r9 refactor was the
     text_semantic_dedup_docs 1.7x bench regression)."""
-    from .dedup import _fan_out
-
-    toks_df = _fan_out(
+    toks_df = fan_out(
         df.select(
             F.col(id_col).alias("id"),
             tokens(normalized_text(F.col(text_col))).alias("toks"),
@@ -953,15 +949,13 @@ def hashed_embeddings(
     if dim <= 0 or dim & (dim - 1):
         raise ValueError("dim must be a power of two (sign bit = h >> log2(dim))")
     _dim_bits = dim.bit_length() - 1
-    from ..session import spread_input
-
     h = md5_int(F.md5(F.col("gram")))
     signed = (
         # the gram explode multiplies per-row work ~|tokens|-fold and
         # every gram is md5-hashed; spread a low-parallelism input
         # (single-row-group file) across the session first — no-op when
         # the scan is already parallel (guide §2)
-        unigram_bigram_grams(spread_input(df, id_col), text_col, id_col)
+        unigram_bigram_grams(fan_out(df, id_col), text_col, id_col)
         .select(
             "id",
             F.pmod(h, F.lit(dim)).cast("int").alias("coord"),
@@ -1518,9 +1512,7 @@ def zipf_fit(
         raise ValueError(f"zipf_fit: max_rank must be >= 2, got {max_rank}")
     from pyspark.sql import Window
 
-    from .dedup import _fan_out
-
-    toks = _fan_out(
+    toks = fan_out(
         df.select(tokens(normalized_text(F.col(text_col))).alias("__t"))
     ).select(F.explode("__t").alias("__w"))
     wc = toks.groupBy("__w").agg(F.count(F.lit(1)).cast("bigint").alias("__c"))

@@ -1,11 +1,14 @@
 """Partition-width guard shared by CPU-heavy single-pass kernels.
 
-Small parquet inputs arrive as 1-3 partitions; a compute-bound stage
-(per-row hashing, a 16-column explode fan-out) would then use 3 of 32
-cores. ``fan_out`` repartitions ONLY when the input is narrower than the
-cluster — on a real multi-executor scan of large data it is a no-op, so
-the shuffle is paid exactly when it buys parallelism. Call it on the
-narrowest possible projection so the exchange carries few columns.
+Scan parallelism is set by file layout, not by downstream compute: small
+parquet inputs arrive as 1-3 partitions, and a compute-bound stage
+(per-row hashing, a 16-column explode fan-out, a x50 replicate explode)
+would then use 3 of 32 cores. ``fan_out`` repartitions ONLY when the
+input is narrower than the cluster — on a real multi-executor scan of
+large data it is a no-op, so the shuffle is paid exactly when it buys
+parallelism ("derive partitioning from the input, not from a
+constant", applied to the small-file edge). Call it on the narrowest
+possible projection so the exchange carries few columns.
 """
 
 from __future__ import annotations
@@ -13,11 +16,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame) -> DataFrame:
+def fan_out(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` iff it is narrower.
+
+    ``keys``: optional hash-partition columns (deterministic under task
+    retry without the round-robin path's local sort). Without keys the
+    round-robin repartition is used (sortBeforeRepartition stays on, so
+    retries are deterministic per SPARK-23207). Streaming frames (no
+    ``.rdd``) and frames whose partition count cannot be read are
+    returned unchanged."""
+    if getattr(df, "isStreaming", False):
+        # micro-batch parallelism is the source's concern
+        # (maxFilesPerTrigger etc.), not a repartition
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    try:
+        cur = df.rdd.getNumPartitions()
+    except Exception:
+        return df
+    if cur >= target:
+        return df
+    if keys:
+        from pyspark.sql import functions as F
+
+        return df.repartition(target, *[F.col(k) for k in keys])
+    return df.repartition(target)
 
 
 def salted_join(

@@ -28,7 +28,8 @@ reads in ``df.explain('formatted')``:
    parallelism                  -> a work-multiplying explode inherits
                                    the file layout's task count; spread
                                    the input first when the multiplier
-                                   is large (session.spread_input): info.
+                                   is large (partitioning.fan_out):
+                                   info.
 """
 
 from __future__ import annotations
@@ -306,8 +307,8 @@ def scale_audit(df: DataFrame) -> list[Finding]:
     # is set by file layout, not by compute need. On small/single-row-
     # group files the whole multiplier runs in one task (the r12
     # bootstrap/table_profile/exact-pairs finding — fixed by
-    # session.spread_input); at cluster scale the scan is already wide,
-    # so this is informational. BroadcastExchange does NOT count as a
+    # operators.partitioning.fan_out); at cluster scale the scan is
+    # already wide, so this is informational. BroadcastExchange does NOT count as a
     # barrier (it repartitions the build side, not the streamed chain);
     # cached/checkpointed inputs (InMemoryTableScan / Scan ExistingRDD)
     # carry their own layout and are treated as decoupled.
@@ -336,7 +337,7 @@ def scale_audit(df: DataFrame) -> list[Finding]:
                 "a Generate (explode) runs at raw scan parallelism (no "
                 "exchange below it); if the per-row multiplier is large "
                 "and input files are small, spread the input first "
-                "(session.spread_input / dedup._fan_out)",
+                "(operators.partitioning.fan_out)",
             )
         )
     if "BatchEvalPython" in final:

@@ -76,47 +76,6 @@ def get_spark(app_name: str = "pd_explain_spark", shuffle_partitions: int | None
     return spark
 
 
-def spread_input(df, *keys: str):
-    """Raise a small input's parallelism to the session default before
-    heavy per-row work (work-multiplying explodes, per-row hashing) —
-    and do NOTHING when the input is already parallel enough.
-
-    Why (guide §2 / §6): scan parallelism is set by file layout, not by
-    downstream compute. A single-row-group parquet file is one scan
-    task no matter how many cores the session has, so an operator that
-    multiplies per-row work (e.g. a x50 replicate explode, per-gram
-    md5 hashing) serializes on one core while the rest idle. At
-    cluster scale the scan already has >= defaultParallelism splits and
-    this helper is a no-op — the condition keeps the extra exchange
-    out of every plan that does not need it, so it is NOT a local-mode
-    tuning knob: it is "derive partitioning from the input, not from a
-    constant" applied to the small-file edge.
-
-    ``keys``: optional hash-partition columns (deterministic under task
-    retry without the round-robin path's local sort). Without keys the
-    round-robin repartition is used (sortBeforeRepartition stays on, so
-    retries are deterministic per SPARK-23207).
-    """
-    if getattr(df, "isStreaming", False):
-        # no .rdd on a streaming frame; micro-batch parallelism is the
-        # source's concern (maxFilesPerTrigger etc.), same guard as
-        # dedup._fan_out
-        return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if cur >= target:
-        return df
-    if keys:
-        from pyspark.sql import functions as F
-
-        return df.repartition(target, *[F.col(k) for k in keys])
-    return df.repartition(target)
-
-
 def checkpoint_df(df, eager: bool = True):
     """Truncate ``df``'s lineage — the iterative-algorithm hygiene every
     pointer-jumping / Lloyd / BPE round needs (persist keeps the DATA

@@ -58,6 +58,28 @@ def test_fedex_join_and_shapley_run(lineitem, orders, spark):
     assert abs(share["left"] + share["right"] - 1.0) < 1e-9
 
 
+def test_join_side_without_candidates_explains_empty(spark):
+    """A join whose right side holds only the key column has no right-side
+    candidate attributes: both the right-side FEDEX explanation and the
+    right player of the Shapley explanation come back empty instead of
+    raising."""
+    left = to_explainable(
+        spark.createDataFrame([(i, float(i % 40)) for i in range(200)], ["k", "v"]),
+        name="lhs",
+    )
+    right = to_explainable(
+        spark.createDataFrame([(i,) for i in range(0, 200, 2)], "k bigint"), name="rhs"
+    )
+    j = left.merge(right, on="k")
+    exp = j.explain(consider="right")
+    assert exp.kind == "fedex-join"
+    assert exp.items == []
+    sh = j.explain(explainer="shapley")
+    assert sh.kind == "fedex-shapley"
+    assert [i for i in sh.items if i.side == "right"] == []
+    assert not any(k.startswith("right.") for k in sh.scores)
+
+
 def test_explanation_to_df_schema(spark, lineitem):
     out = lineitem[lineitem["l_quantity"] > 45]
     df = out.explain(top_k=2).to_df(spark)
@@ -248,6 +270,54 @@ def test_outlier_kernel_table_matches_explain_choice(spark):
     assert exp.items
     # explain()'s winning influence equals the table's max (same algebra)
     assert abs(float(best["influence"]) - exp.items[0].influence) < 1e-5
+
+
+def test_profile_merge_keeps_few_valued_numeric_rules(spark):
+    """One profile pass serves every explainer, and the rules it could
+    break still hold: (1) the outlier explainer bins a numeric attribute
+    with <= 6 distinct values and finds it as the planted cause;
+    (2) filter_kernel_table bins such an attribute numerically; (3) the
+    correlation anchor leaves min/max/distinct unchanged."""
+    from pd_explain_spark.explainers.fedex import filter_kernel_table
+    from pd_explain_spark.explainers.histograms import profile_columns
+
+    rng = np.random.RandomState(5)
+    rows = []
+    for g in ["a", "b", "c", "d", "z"]:
+        rows += [(g, 10.0 + rng.rand(), float(rng.randint(0, 3)), float(rng.randint(0, 500)))
+                 for _ in range(200)]
+    # z is an outlier only because of its flag == 3 rows
+    rows += [("z", 60.0, 3.0, float(rng.randint(0, 500))) for _ in range(50)]
+    sdf = spark.createDataFrame(rows, ["g", "v", "flag", "noise"])
+    df = to_explainable(sdf, name="few_valued")
+
+    exp = df.groupby("g")["v"].mean().explain(explainer="outlier", target="z", dir="high")
+    assert exp.items
+    top = exp.items[0]
+    assert top.attribute == "flag"
+    assert top.bin.endswith(", 3]")
+    assert top.influence > 0
+
+    out = df[df["v"] > 11.0]
+    t = filter_kernel_table(out, ["flag"], n_bins=10).toPandas()
+    # numeric bins are zero-padded indices over [0, 3], not the values
+    assert sorted(t["bin"]) == ["0000", "0003", "0006", "0009"]
+    assert t["src_cnt"].sum() == len(rows)
+
+    cols = ["v", "flag", "noise", "g"]
+    plain = profile_columns(sdf, cols)
+    anchored = profile_columns(sdf, cols, corr_anchor="v")
+    assert list(plain) == list(anchored) == cols
+    for c in cols:
+        p, a = plain[c], anchored[c]
+        assert (p.is_numeric, p.distinct, p.vmin, p.vmax) == (a.is_numeric, a.distinct, a.vmin, a.vmax)
+        assert p.corr is None
+    assert not plain["flag"].is_numeric  # the FEDEX rule: nunique > 6
+    assert anchored["v"].corr is None and anchored["g"].corr is None
+    v = [r[1] for r in rows]
+    for c, i in (("flag", 2), ("noise", 3)):
+        want = np.corrcoef(v, [r[i] for r in rows])[0, 1]
+        assert abs(anchored[c].corr - want) < 1e-9
 
 
 # ------------------------------------------------------- series b_join (r5)

@@ -195,7 +195,8 @@ def test_filter_kernel_single_scan_partial_agg(spark, sf_dir, lineitem):
 def test_outlier_kernel_single_scan(spark, sf_dir, orders):
     """The bin-removal influence table reads the source exactly once: the
     partials cube is a single explode+groupBy job."""
-    from pd_explain_spark.explainers.outlier import OutlierExplainer
+    from pd_explain_spark.explainers.histograms import profile_columns
+    from pd_explain_spark.explainers.outlier import OutlierExplainer, _bin_ranges
 
     o = orders.df.select(
         "o_orderpriority", "o_custkey", "o_orderkey",
@@ -206,7 +207,8 @@ def test_outlier_kernel_single_scan(spark, sf_dir, orders):
     e = to_explainable(o, name="orders_cents")
     g = e.groupby("o_orderpriority")["cents"].mean()
     exp = OutlierExplainer(g, target="1-URGENT")
-    ranges, _ = exp._profile_ranges(o, ["o_custkey", "o_orderkey"])
+    attrs = ["o_custkey", "o_orderkey"]
+    ranges = _bin_ranges(profile_columns(o, attrs), attrs)
     _, base_cols, group_cols = exp._exploded_base(o, ranges)
     partials_df = o.select(*base_cols).groupBy(*group_cols).agg(F.count(F.lit(1)).alias("cnt"))
     final = _final(_plan(partials_df))
@@ -585,13 +587,13 @@ def test_scale_audit_generate_on_raw_scan_info(spark, sf_dir):
     """The r12 'explode-under-one-split' detector: a work-multiplying
     Generate fed directly by a file scan (no repartitioning exchange
     below it) reports the info finding; the same explode behind a
-    spread_input barrier does not. Would have caught the r12
+    fan_out barrier does not. Would have caught the r12
     bootstrap/table_profile/exact-pairs single-task findings
     mechanically."""
     import os
 
     from pd_explain_spark.plans.audit import scale_audit
-    from pd_explain_spark.session import spread_input
+    from pd_explain_spark.operators.partitioning import fan_out
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     exploded = docs.select(
@@ -604,7 +606,7 @@ def test_scale_audit_generate_on_raw_scan_info(spark, sf_dir):
         for f in scale_audit(exploded)
         if f.check == "generate-on-raw-scan"
     )
-    spread = spread_input(docs, "doc_id").select(
+    spread = fan_out(docs, "doc_id").select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
     )
     assert "generate-on-raw-scan" not in {f.check for f in scale_audit(spread)}
