@@ -21,6 +21,10 @@ xxhash64) — JVM-side, no Python in the hot path.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -176,13 +180,22 @@ def _two_side_shingle_index(
     views are filters of the cached table; a doc id present on both
     sides keeps two tagged rows, exactly matching two separate indexes.
     Returns (new_inv, corp_inv); the persisted union is appended to
-    ``cached`` for release by _finalize_release."""
+    ``cached`` for release by _finalize_release.
+
+    Sides whose id columns differ in type are unioned on string ids and
+    each view casts back to its own side's type: union type coercion
+    would cast the string side to the numeric one, which raises on a
+    non-numeric id and silently rewrites a numeric-looking one."""
     from pyspark.storagelevel import StorageLevel
 
+    new_t = new_df.select(id_col).schema[0].dataType
+    corp_t = corpus_df.select(id_col).schema[0].dataType
+    same = new_t == corp_t
+    ids = F.col(id_col) if same else F.col(id_col).cast("string").alias(id_col)
     tagged = new_df.select(
-        F.lit(True).alias("__new"), F.col(id_col), F.col(text_col)
+        F.lit(True).alias("__new"), ids, F.col(text_col)
     ).unionByName(
-        corpus_df.select(F.lit(False).alias("__new"), F.col(id_col), F.col(text_col))
+        corpus_df.select(F.lit(False).alias("__new"), ids, F.col(text_col))
     )
     inv_all = _shingle_index(tagged, text_col, id_col, n, side_col="__new").persist(
         StorageLevel.MEMORY_AND_DISK
@@ -196,9 +209,12 @@ def _two_side_shingle_index(
     # so every subquery reads blocks.
     inv_all.count()
     cached.append(inv_all)
-    new_inv = inv_all.filter(F.col("__new")).select("id", "shingle")
-    corp_inv = inv_all.filter(~F.col("__new")).select("id", "shingle")
-    return new_inv, corp_inv
+
+    def side(flag, t):
+        sid = F.col("id") if same else F.col("id").cast(t).alias("id")
+        return inv_all.filter(flag).select(sid, "shingle")
+
+    return side(F.col("__new"), new_t), side(~F.col("__new"), corp_t)
 
 
 # ---------------------------------------------------------------- exact jaccard
@@ -239,7 +255,7 @@ def ngram_jaccard_pairs(
             .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .agg(F.count(F.lit(1)).alias("inter"))
         )
-        return _finalize_release(_jaccard_from_inter(inter, inv, threshold), cached)
+        return _finalize_release(_jaccard_from_inter(inter, inv, inv, threshold), cached)
     disc = _df_pruned(inv, max_df)
     a, b = disc.alias("a"), disc.alias("b")
     cands = (
@@ -247,9 +263,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    return _finalize_release(
-        _verify_pairs(cands, inv, threshold, _cache_registry=cached), cached
-    )
+    return _finalize_release(_verify_pairs(cands, inv, inv, threshold, cached), cached)
 
 
 def _hot_shingles(inv: DataFrame, max_df: float, n_docs: int | None = None) -> DataFrame:
@@ -293,63 +307,6 @@ def _df_pruned(inv: DataFrame, max_df: float, n_docs: int | None = None) -> Data
     return inv.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-def _catalog_table_name(prefix: str, path: str) -> str:
-    """Deterministic catalog name for a path-backed index table.
-    Distinct paths can collapse to one slug (/tmp/a/b and /tmp/a_b) —
-    a raw-path hash keeps one catalog entry per physical index."""
-    import hashlib
-    import re as _re
-
-    slug = _re.sub(r"[^A-Za-z0-9]+", "_", path).strip("_").lower()
-    digest = hashlib.md5(path.encode("utf-8")).hexdigest()[:8]
-    return f"{prefix}_{slug}_{digest}"
-
-
-def _norm_catalog_location(p: str) -> str:
-    from urllib.parse import urlparse
-
-    u = urlparse(p)
-    return (u.path or p).rstrip("/")
-
-
-def _ensure_external_bucketed(
-    spark, name: str, data_path: str, cluster_cols: list[str],
-    buckets: int, sort_cols: list[str] | None = None,
-) -> DataFrame:
-    """Return the bucketed external table at ``data_path``, registering
-    it in the (in-memory) session catalog when a fresh session doesn't
-    know it. Never trusts a same-named entry blindly: if its LOCATION is
-    not ``data_path`` (stale catalog, collided name) the entry is
-    dropped and re-created, or a join would silently pair another
-    index's table with this path's sidecar files. The files were
-    written by a bucketed writer (bucket id is encoded in file names),
-    so an identical CLUSTERED BY spec restores the exchange-free join
-    property. Shared by every persisted index (NearDupIndex,
-    SimHashIndex)."""
-    if spark.catalog.tableExists(name):
-        loc = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-            .where("col_name = 'Location'")
-            .first()
-        )
-        if loc is None or _norm_catalog_location(
-            loc["data_type"]
-        ) != _norm_catalog_location(data_path):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if not spark.catalog.tableExists(name):
-        schema = spark.read.parquet(data_path).schema
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        sort = f"SORTED BY ({', '.join(sort_cols)}) " if sort_cols else ""
-        spark.sql(
-            f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({', '.join(cluster_cols)}) {sort}"
-            f"INTO {int(buckets)} BUCKETS LOCATION '{data_path}'"
-        )
-    return spark.table(name)
-
-
 def _flagged_anti_join(
     new_df: DataFrame, flagged_ids: DataFrame, id_col: str
 ) -> DataFrame:
@@ -380,81 +337,111 @@ def _levenshtein_verify(
     )
 
 
-def _verify_pairs(
-    cands: DataFrame, inv: DataFrame, threshold: float,
-    _cache_registry: list | None = None,
+def _set_sizes(inv: DataFrame) -> DataFrame:
+    """(id, n_sh): per-doc set size of an exploded (id, element) index."""
+    return inv.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+
+
+def _named_sizes(sizes: DataFrame, id_name: str, n_name: str) -> DataFrame:
+    return sizes.select(F.col("id").alias(id_name), F.col("n_sh").alias(n_name))
+
+
+def _jaccard_ratio(
+    inter: DataFrame, sa: DataFrame, sb: DataFrame, a: str, b: str, threshold: float
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs against the full
-    shingle index: both verify sides are semi-joined (broadcast) to the
-    candidate id sets first, so the big (id, shingle) table never
-    shuffles rows for non-candidate docs.
+    """(a, b, inter) + per-side set sizes (a, n_a) and (b, n_b) ->
+    thresholded exact Jaccard, |A ∩ B| / (|A| + |B| - |A ∩ B|)."""
+    return (
+        inter.join(sa, a)
+        .join(sb, b)
+        .select(
+            a,
+            b,
+            F.round(
+                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _verify_pairs(
+    cands: DataFrame,
+    a_inv: DataFrame,
+    b_inv: DataFrame,
+    threshold: float,
+    cached: list,
+    a: str = "id_a",
+    b: str = "id_b",
+    b_sizes: DataFrame | None = None,
+) -> DataFrame:
+    """Exact-Jaccard verification of an (a, b) candidate list against
+    the UNPRUNED shingle indexes of the two sides (the same index twice
+    within one corpus; the batch and corpus indexes across corpora):
+    both verify sides are semi-joined (broadcast — tiny by construction)
+    to the candidate id sets first, so the big (id, shingle) tables
+    never shuffle rows for non-candidate docs.
 
     ``cands`` is referenced three times below (both id-set broadcasts and
-    the join spine); persisting it keeps the candidate-generation subtree
-    — which may itself contain an LSH self-join — from being recomputed
-    per reference (3x the whole upstream cost, measured)."""
+    the join spine); it is persisted (and appended to ``cached``) so the
+    candidate-generation subtree — which may itself contain an LSH
+    self-join — is not recomputed per reference (3x the whole upstream
+    cost, measured). ``b_sizes`` is a precomputed (id, n_sh) table of the
+    b side (a persisted index's sizes)."""
     from pyspark.storagelevel import StorageLevel
 
     cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    if _cache_registry is not None:
-        _cache_registry.append(cands)
-    ids_a = cands.select(F.col("id_a").alias("id")).distinct()
-    ids_b = cands.select(F.col("id_b").alias("id")).distinct()
-    ia = inv.join(F.broadcast(ids_a), "id", "semi").select(
-        F.col("id").alias("id_a"), F.col("shingle").alias("sh_a")
+    cached.append(cands)
+    ids_a = cands.select(F.col(a).alias("id")).distinct()
+    ids_b = cands.select(F.col(b).alias("id")).distinct()
+    va = a_inv.join(F.broadcast(ids_a), "id", "semi").select(
+        F.col("id").alias(a), F.col("shingle").alias("sh_a")
     )
-    ib = inv.join(F.broadcast(ids_b), "id", "semi").select(
+    vb = b_inv.join(F.broadcast(ids_b), "id", "semi").select(
         F.col("id").alias("__idb"), F.col("shingle").alias("sh_b")
     )
     inter = (
-        cands.join(ia, "id_a")
-        .join(ib, (F.col("id_b") == F.col("__idb")) & (F.col("sh_a") == F.col("sh_b")))
-        .groupBy("id_a", "id_b")
+        cands.join(va, a)
+        .join(vb, (F.col(b) == F.col("__idb")) & (F.col("sh_a") == F.col("sh_b")))
+        .groupBy(a, b)
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    # set sizes from the candidate-restricted sides (ia/ib), not the full
-    # index: the jaccard join is inner on candidate ids, so non-candidate
+    # set sizes from the candidate-restricted sides (va/vb), not the full
+    # indexes: the jaccard join is inner on candidate ids, so non-candidate
     # sizes were computed only to be dropped — O(candidates) beats
     # O(corpus) at any scale, and each doc's own row count is unchanged
     # by the semi-join, so every reported value is identical.
-    sa = ia.groupBy("id_a").agg(F.count(F.lit(1)).alias("n_a"))
-    sb = ib.groupBy("__idb").agg(F.count(F.lit(1)).alias("n_b")).withColumnRenamed(
-        "__idb", "id_b"
-    )
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ).alias("jaccard"),
+    sa = va.groupBy(a).agg(F.count(F.lit(1)).alias("n_a"))
+    if b_sizes is not None:
+        sb = _named_sizes(b_sizes, b, "n_b")
+    else:
+        sb = vb.groupBy("__idb").agg(F.count(F.lit(1)).alias("n_b")).withColumnRenamed(
+            "__idb", b
         )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_ratio(inter, sa, sb, a, b, threshold)
 
 
-def _jaccard_from_inter(inter: DataFrame, inv: DataFrame, threshold: float) -> DataFrame:
-    """(id_a, id_b, inter) + inverted index sizes -> thresholded Jaccard.
-
-    |A ∪ B| = |A| + |B| - |A ∩ B|; set sizes come from the exploded index
-    (one groupBy), so no array columns ever cross a join boundary.
-    """
-    sizes = inv.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+def _jaccard_from_inter(
+    inter: DataFrame,
+    a_inv: DataFrame,
+    b_inv: DataFrame,
+    threshold: float,
+    a: str = "id_a",
+    b: str = "id_b",
+    b_sizes: DataFrame | None = None,
+) -> DataFrame:
+    """(a, b, inter) + the two sides' inverted indexes -> thresholded
+    Jaccard. Set sizes come from the exploded indexes (one groupBy per
+    side, or the precomputed ``b_sizes``), so no array columns ever
+    cross a join boundary."""
+    sb = _set_sizes(b_inv) if b_sizes is None else b_sizes
+    return _jaccard_ratio(
+        inter,
+        _named_sizes(_set_sizes(a_inv), a, "n_a"),
+        _named_sizes(sb, b, "n_b"),
+        a,
+        b,
+        threshold,
     )
 
 
@@ -501,8 +488,6 @@ def _cross_corpus_pairs(
     the body of :func:`near_dup_pairs_against`, also reused by
     :class:`NearDupIndex` where the corpus index is a persisted bucketed
     table (and ``corp_sizes`` its precomputed per-doc set sizes)."""
-    from pyspark.storagelevel import StorageLevel
-
     if max_df is None:
         inter = (
             new_inv.alias("a")
@@ -512,11 +497,12 @@ def _cross_corpus_pairs(
             )
             .agg(F.count(F.lit(1)).alias("inter"))
         )
-        out = _cross_jaccard_tail(inter, new_inv, corp_inv, threshold, corp_sizes)
+        out = _jaccard_from_inter(
+            inter, new_inv, corp_inv, threshold, "new_id", "corpus_id", corp_sizes
+        )
     else:
         # candidate discovery on the df-pruned indexes (bounds the join
-        # fan-out), exact verification on the full ones — the cross-corpus
-        # analogue of _verify_pairs
+        # fan-out), exact verification on the full ones
         disc_a = _df_pruned(new_inv, max_df)
         # corp_n_docs (from the index's tiny sizes table) keeps the
         # hot-shingle cap from re-scanning the big corpus index per batch
@@ -528,107 +514,11 @@ def _cross_corpus_pairs(
                 F.col("a.id").alias("new_id"), F.col("b.id").alias("corpus_id")
             )
             .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        cached.append(cands)
-        out = _verified_cross_jaccard(
-            cands, new_inv, corp_inv, threshold, corp_sizes
+        out = _verify_pairs(
+            cands, new_inv, corp_inv, threshold, cached, "new_id", "corpus_id", corp_sizes
         )
     return _finalize_release(out, cached)
-
-
-def _verified_cross_jaccard(
-    cands: DataFrame,
-    new_inv: DataFrame,
-    corp_inv: DataFrame,
-    threshold: float,
-    corp_sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Exact Jaccard for a given (new_id, corpus_id) candidate list,
-    verified against the UNPRUNED per-side indexes: the verify sides are
-    semi-joined to the candidate id sets (broadcast — tiny by
-    construction) so non-candidate docs never shuffle. Shared by the
-    n-gram max_df path and the cross-corpus MinHash flavor."""
-    ids_a = cands.select(F.col("new_id").alias("id")).distinct()
-    ids_b = cands.select(F.col("corpus_id").alias("id")).distinct()
-    va = new_inv.join(F.broadcast(ids_a), "id", "semi").select(
-        F.col("id").alias("new_id"), F.col("shingle").alias("sh_a")
-    )
-    vb = corp_inv.join(F.broadcast(ids_b), "id", "semi").select(
-        F.col("id").alias("__idb"), F.col("shingle").alias("sh_b")
-    )
-    inter = (
-        cands.join(va, "new_id")
-        .join(
-            vb,
-            (F.col("corpus_id") == F.col("__idb"))
-            & (F.col("sh_a") == F.col("sh_b")),
-        )
-        .groupBy("new_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    # sizes from the candidate-restricted sides (same argument as
-    # _verify_pairs): the tail's joins are inner on candidate ids, so
-    # full-index size aggregates were pure discarded work. A doc's row
-    # count is unchanged by the semi-join — values identical.
-    sa = va.groupBy("new_id").agg(F.count(F.lit(1)).alias("n_a"))
-    if corp_sizes is not None:
-        sb = corp_sizes.select(
-            F.col("id").alias("corpus_id"), F.col("n_sh").alias("n_b")
-        )
-    else:
-        sb = vb.groupBy("__idb").agg(
-            F.count(F.lit(1)).alias("n_b")
-        ).withColumnRenamed("__idb", "corpus_id")
-    return (
-        inter.join(sa, "new_id")
-        .join(sb, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def _cross_jaccard_tail(
-    inter: DataFrame,
-    new_inv: DataFrame,
-    corp_inv: DataFrame,
-    threshold: float,
-    corp_sizes: DataFrame | None = None,
-) -> DataFrame:
-    """(new_id, corpus_id, inter) -> thresholded exact Jaccard, with set
-    sizes computed per side from the unpruned indexes (or the index's
-    precomputed sizes table)."""
-    sa = new_inv.groupBy("id").agg(F.count(F.lit(1)).alias("n_a")).withColumnRenamed(
-        "id", "new_id"
-    )
-    if corp_sizes is not None:
-        sb = corp_sizes.select(
-            F.col("id").alias("corpus_id"), F.col("n_sh").alias("n_b")
-        )
-    else:
-        sb = (
-            corp_inv.groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n_b"))
-            .withColumnRenamed("id", "corpus_id")
-        )
-    return (
-        inter.join(sa, "new_id")
-        .join(sb, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def dedup_near_against(
@@ -649,7 +539,226 @@ def dedup_near_against(
 
 
 # ---------------------------------------------------------------- persisted index
-class NearDupIndex:
+def _hadoop_path(spark, p: str):
+    """(FileSystem, Path) of ``p`` through the session's Hadoop
+    configuration — the resolution Spark applies to an index's data
+    directories, so a scheme-less path lands on ``fs.defaultFS`` here
+    exactly as it does for ``inv/`` and ``sizes/``."""
+    sc = spark.sparkContext
+    jp = sc._jvm.org.apache.hadoop.fs.Path(p)
+    return jp.getFileSystem(sc._jsc.hadoopConfiguration()), jp
+
+
+def _path_exists(spark, p: str) -> bool:
+    fs, jp = _hadoop_path(spark, p)
+    return bool(fs.exists(jp))
+
+
+def _write_meta(spark, path: str, meta: dict) -> None:
+    """Write an index's ``path/meta.json`` from the driver, no Spark job."""
+    fs, jp = _hadoop_path(spark, f"{path}/meta.json")
+    out = fs.create(jp, True)
+    try:
+        out.write(bytearray(json.dumps(meta, sort_keys=True).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_meta(spark, path: str) -> dict:
+    """Read an index's ``path/meta.json`` on the driver, no Spark job."""
+    fs, jp = _hadoop_path(spark, f"{path}/meta.json")
+    stream = fs.open(jp)
+    try:
+        raw = spark.sparkContext._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(
+            stream
+        )
+    finally:
+        stream.close()
+    return json.loads(bytes(raw).decode("utf-8"))
+
+
+class _PersistedIndex:
+    """Save / append / load / drop of the persisted dedup indexes
+    (:class:`NearDupIndex`, :class:`SimHashIndex`). Layout under ``path``:
+
+     * ``path/<_DATA>/`` — the index rows (``inv`` / ``blocks``, also the
+       attribute holding them) as the files of a BUCKETED external table,
+       ``CLUSTERED BY`` and ``SORTED BY`` ``_CLUSTER``: the probe join's
+       keys, so the persisted corpus side joins with no exchange.
+       Bucketing needs a catalog entry (plain parquet carries no bucket
+       spec); it is named ``_table_name(path)``.
+     * ``path/meta.json`` — the bucket count plus the build parameters
+       (``n`` / ``hash_fn``), written and read on the driver through the
+       session's Hadoop FileSystem, with no Spark job.
+     * ``path/sizes/`` — NearDupIndex only: per-doc shingle counts as
+       plain parquet, the Jaccard denominator.
+
+    The default session catalog is in-memory: :meth:`load` re-registers
+    the external table from ``path`` when the session does not know it,
+    so an index survives across sessions like any warehouse table, and
+    :meth:`drop` removes the entry and keeps the files.
+
+    Subclasses set ``_PREFIX`` (catalog-name prefix), ``_DATA`` and
+    ``_CLUSTER``, and define ``_meta()`` (build parameters),
+    ``_from_table()`` (instance from the registered table and meta) and
+    ``_batch()`` (index rows of a new batch)."""
+
+    _PREFIX: str
+    _DATA: str
+    _CLUSTER: tuple
+
+    @classmethod
+    def _table_name(cls, path: str) -> str:
+        """Deterministic catalog name for the index at ``path``. Distinct
+        paths can collapse to one slug (/tmp/a/b and /tmp/a_b) — a
+        raw-path hash keeps one catalog entry per physical index."""
+        slug = re.sub(r"[^A-Za-z0-9]+", "_", path).strip("_").lower()
+        digest = hashlib.md5(path.encode("utf-8")).hexdigest()[:8]
+        return f"{cls._PREFIX}_{slug}_{digest}"
+
+    @classmethod
+    def _write(cls, rows: DataFrame, path: str, buckets: int, mode: str) -> None:
+        (
+            rows.write.mode(mode)
+            .option("path", f"{path}/{cls._DATA}")
+            .bucketBy(int(buckets), *cls._CLUSTER)
+            .sortBy(*cls._CLUSTER)
+            .saveAsTable(cls._table_name(path))
+        )
+
+    @classmethod
+    def _register(cls, spark, path: str, buckets: int) -> DataFrame:
+        """The bucketed external table at ``path``, registered in the
+        session catalog when the session does not know it. Never trusts
+        a same-named entry blindly: if its LOCATION is not this path's
+        data directory (stale catalog, collided name) the entry is
+        dropped and re-created, or a join would silently pair another
+        index's table with this path's sidecar files. The files were
+        written by a bucketed writer (bucket id is encoded in file
+        names), so an identical CLUSTERED BY spec restores the
+        exchange-free join property."""
+        from urllib.parse import urlparse
+
+        def norm(p: str) -> str:
+            return (urlparse(p).path or p).rstrip("/")
+
+        name, data_path = cls._table_name(path), f"{path}/{cls._DATA}"
+        if spark.catalog.tableExists(name):
+            loc = (
+                spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
+                .where("col_name = 'Location'")
+                .first()
+            )
+            if loc is None or norm(loc["data_type"]) != norm(data_path):
+                cls.drop(spark, path)
+        if not spark.catalog.tableExists(name):
+            schema = spark.read.parquet(data_path).schema
+            ddl = ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+            )
+            keys = ", ".join(cls._CLUSTER)
+            spark.sql(
+                f"CREATE TABLE {name} ({ddl}) USING PARQUET "
+                f"CLUSTERED BY ({keys}) SORTED BY ({keys}) "
+                f"INTO {int(buckets)} BUCKETS LOCATION '{data_path}'"
+            )
+        return spark.table(name)
+
+    def _save_sidecars(self, spark, path: str) -> None:
+        pass
+
+    def _append_sidecars(self, spark, path: str, batch: DataFrame, dedup_ids: bool) -> None:
+        pass
+
+    def save(self, path: str, buckets: int = 64, mode: str = "errorifexists"):
+        """Write the index under ``path`` (layout: :class:`_PersistedIndex`)
+        and return the reloaded table-backed index, so later joins use
+        the bucket layout.
+
+        ``mode``: ``errorifexists`` (``error``) raises before any write
+        when an index is already at ``path``; ``ignore`` then writes
+        nothing and returns the saved index; ``overwrite`` replaces its
+        table, sidecars and meta. ``append`` is rejected: grow a saved
+        index with :meth:`append_save`, which keeps its bucket spec and
+        skips already-indexed ids."""
+        spark = getattr(self, self._DATA).sparkSession
+        mode = mode.lower()
+        if mode in ("error", "default"):
+            mode = "errorifexists"
+        if mode not in ("errorifexists", "ignore", "overwrite"):
+            raise ValueError(
+                f"{type(self).__name__}.save: mode {mode!r} is not supported; use "
+                "'errorifexists', 'ignore' or 'overwrite', and append_save(path, "
+                "new_df) to grow a saved index"
+            )
+        if mode != "overwrite" and any(
+            _path_exists(spark, f"{path}/{p}") for p in ("meta.json", self._DATA)
+        ):
+            if mode == "ignore":
+                return self.load(spark, path)
+            raise FileExistsError(f"{type(self).__name__}.save: {path!r} holds an index")
+        # drop first: saveAsTable(overwrite) on an existing external table
+        # keeps the OLD bucket spec, and an entry whose files are gone
+        # would fail the write
+        self.drop(spark, path)
+        self._write(getattr(self, self._DATA), path, buckets, "overwrite")
+        self._save_sidecars(spark, path)
+        _write_meta(spark, path, {**self._meta(), "buckets": int(buckets)})
+        return self.load(spark, path)
+
+    def append_save(
+        self,
+        path: str,
+        new_df: DataFrame,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        dedup_ids: bool = True,
+    ):
+        """Grow the PERSISTED index at ``path`` with a new batch — the
+        maintenance contract that makes the index an ingest-loop
+        primitive (same shape as :meth:`IvfIndex.append_save`): index the
+        batch with the saved build parameters, anti-join already-indexed
+        doc ids (``dedup_ids``, default — a retried batch must not
+        double-index), APPEND the rows into the bucketed table with the
+        SAME bucket spec (each batch writes only its own bucketed files;
+        existing data is never rewritten, and the exchange-free join
+        property is preserved because bucket ids are per-file), then
+        append the sidecars. Returns the reloaded table-backed index."""
+        spark = getattr(self, self._DATA).sparkSession
+        meta = _read_meta(spark, path)
+        name = self._table_name(path)
+        if not spark.catalog.tableExists(name):
+            # fresh session: register the table first so the append
+            # validates against the recorded bucket spec
+            self._register(spark, path, meta["buckets"])
+        batch = self._batch(new_df, text_col, id_col, meta)
+        rows = batch
+        if dedup_ids:
+            # anti-join against the TABLE's own ids, not a sidecar: the
+            # writes are not atomic together, and a retry after a crash
+            # between them must neither re-append rows nor skip the batch
+            # wholesale. Keying each write off its OWN destination makes
+            # the retry self-healing.
+            rows = batch.join(spark.table(name).select("id").distinct(), "id", "left_anti")
+        self._write(rows, path, meta["buckets"], "append")
+        self._append_sidecars(spark, path, batch, dedup_ids)
+        return self.load(spark, path)
+
+    @classmethod
+    def load(cls, spark, path: str):
+        meta = _read_meta(spark, path)
+        return cls._from_table(spark, path, cls._register(spark, path, meta["buckets"]), meta)
+
+    @classmethod
+    def drop(cls, spark, path: str) -> None:
+        """Remove the index's catalog entry and keep its files — the
+        counterpart of :meth:`load`, which registers them again. Every
+        saved or loaded index holds one session-catalog table; a
+        long-lived session drops the ones it is done with."""
+        spark.sql(f"DROP TABLE IF EXISTS {cls._table_name(path)}")
+
+
+class NearDupIndex(_PersistedIndex):
     """Persisted inverted shingle index of a reference corpus for
     INCREMENTAL near-dup checks — the ingest-loop shape at 100 TB.
 
@@ -672,6 +781,8 @@ class NearDupIndex:
     column needs no exchange).
     """
 
+    _PREFIX, _DATA, _CLUSTER = "neardup_idx", "inv", ("shingle",)
+
     def __init__(self, inv: DataFrame, sizes: DataFrame, n: int):
         self.inv = inv
         self.sizes = sizes
@@ -686,36 +797,25 @@ class NearDupIndex:
         n: int = 3,
     ) -> "NearDupIndex":
         inv = _shingle_index(corpus_df, text_col, id_col, n)
-        sizes = inv.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-        return cls(inv, sizes, n)
+        return cls(inv, _set_sizes(inv), n)
 
-    def save(
-        self, path: str, buckets: int = 64, mode: str = "errorifexists"
-    ) -> "NearDupIndex":
-        """Write the index under ``path``: the inverted index as a
-        BUCKETED external table (parquet files at ``path/inv`` plus a
-        catalog entry named after the path), sizes and meta as plain
-        parquet. Returns the reloaded table-backed index so subsequent
-        joins use the bucket layout.
+    def _meta(self) -> dict:
+        return {"n": int(self.n)}
 
-        Bucketing needs a catalog entry (plain parquet files carry no
-        bucket spec), but the default session catalog is in-memory —
-        :meth:`load` therefore re-registers the external table from
-        ``path`` when a fresh session doesn't know it, so the index
-        survives across sessions/clusters like any warehouse table."""
-        spark = self.inv.sparkSession
-        name = self._table_name(path)
-        if mode == "overwrite":
-            # saveAsTable(overwrite) on an existing external table keeps
-            # the OLD bucket spec; drop first so `buckets` takes effect
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            self.inv.write.mode(mode)
-            .option("path", f"{path}/inv")
-            .bucketBy(buckets, "shingle")
-            .sortBy("shingle")
-            .saveAsTable(name)
+    @classmethod
+    def _from_table(cls, spark, path: str, inv: DataFrame, meta: dict) -> "NearDupIndex":
+        return cls(inv, spark.read.parquet(f"{path}/sizes"), int(meta["n"]))
+
+    @classmethod
+    def _batch(cls, new_df: DataFrame, text_col: str, id_col: str, meta: dict) -> DataFrame:
+        from pyspark.storagelevel import StorageLevel
+
+        # feeds both the inv append and the sizes append
+        return _shingle_index(new_df, text_col, id_col, int(meta["n"])).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
+
+    def _save_sidecars(self, spark, path: str) -> None:
         # sizes from the JUST-WRITTEN table, not self.sizes: the only
         # constructors are build()/load(), where sizes IS the per-id
         # count of inv, so the rows are identical — but aggregating the
@@ -724,117 +824,20 @@ class NearDupIndex:
         # (one full corpus pass deleted; measured 0.76s -> ~0.2s at
         # sf0.1, and at 100 TB it is the difference between one and two
         # corpus tokenizations per index build).
-        spark.table(name).groupBy("id").agg(
-            F.count(F.lit(1)).alias("n_sh")
-        ).write.mode(mode).parquet(f"{path}/sizes")
-        self._write_meta(spark, f"{path}/meta", mode,
-                         [(int(self.n), int(buckets))], "n int, buckets int")
-        return NearDupIndex.load(spark, path)
-
-    @staticmethod
-    def _write_meta(spark, meta_path: str, mode: str, rows, schema: str):
-        """One-row metadata parquet. For LOCAL paths, write it on the
-        driver with pyarrow — launching a full Spark job (createDataFrame
-        + write stage) for one row costs ~0.5s of pure scheduling; the
-        driver doing trivial data work is exactly what guide §5 allows.
-        Scheme-qualified paths (hdfs://, s3a://...) keep the Spark
-        writer, which knows the cluster filesystem."""
-        if "://" not in meta_path:
-            import os as _os
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            if _os.path.isdir(meta_path):
-                if mode == "errorifexists":
-                    raise FileExistsError(meta_path)
-                for f in _os.listdir(meta_path):
-                    _os.remove(_os.path.join(meta_path, f))
-            _os.makedirs(meta_path, exist_ok=True)
-            names = [c.split()[0] for c in schema.split(",")]
-            cols = {
-                nm: pa.array([r[i] for r in rows], pa.int32())
-                for i, nm in enumerate(names)
-            }
-            pq.write_table(pa.table(cols), _os.path.join(meta_path, "part-0.parquet"))
-            # _SUCCESS marker for parity with a Spark-written directory
-            open(_os.path.join(meta_path, "_SUCCESS"), "w").close()
-        else:
-            spark.createDataFrame(rows, schema).write.mode(mode).parquet(meta_path)
-
-    def append_save(
-        self,
-        path: str,
-        new_df: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        dedup_ids: bool = True,
-    ) -> "NearDupIndex":
-        """Grow the PERSISTED index with a new batch — the maintenance
-        contract that makes the index an ingest-loop primitive (same
-        shape as :meth:`IvfIndex.append_save`): shingle the batch,
-        anti-join already-indexed doc ids (``dedup_ids``, default — a
-        retried batch must not double-index), APPEND the rows into the
-        bucketed ``inv`` table with the SAME bucket spec (each batch
-        writes only its own bucketed files; existing data is never
-        rewritten, and the exchange-free corpus-side join property is
-        preserved because bucket ids are per-file), and append the new
-        per-doc sizes. Returns the reloaded table-backed index."""
-        from pyspark.storagelevel import StorageLevel
-
-        spark = self.inv.sparkSession
-        meta = spark.read.parquet(f"{path}/meta").first()
-        name = self._table_name(path)
-        if not spark.catalog.tableExists(name):
-            # fresh session: register the table first so the append
-            # validates against the recorded bucket spec
-            NearDupIndex.load(spark, path)
-        new_inv = _shingle_index(new_df, text_col, id_col, int(meta["n"])).persist(
-            StorageLevel.MEMORY_AND_DISK
+        _set_sizes(spark.table(self._table_name(path))).write.mode("overwrite").parquet(
+            f"{path}/sizes"
         )
-        inv_to_write = new_inv
+
+    def _append_sidecars(self, spark, path: str, batch: DataFrame, dedup_ids: bool) -> None:
+        sizes = _set_sizes(batch)
         if dedup_ids:
-            # anti-join against the INV TABLE's own ids, not the sizes
-            # file: the two writes below are not atomic together, and a
-            # retry after a crash between them must neither re-append
-            # inv rows (sizes-keyed dedup would: the crashed run wrote
-            # inv but not sizes) nor skip the batch wholesale. Keying
-            # each write off its OWN destination makes the retry
-            # self-healing: inv skips already-written ids, the sizes
-            # write below independently adds whatever ids sizes lacks.
-            indexed = spark.table(name).select("id").distinct()
-            inv_to_write = new_inv.join(indexed, "id", "left_anti")
-        (
-            inv_to_write.write.mode("append")
-            .option("path", f"{path}/inv")
-            .bucketBy(int(meta["buckets"]), "shingle")
-            .sortBy("shingle")
-            .saveAsTable(name)
-        )
-        batch_sizes = new_inv.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-        if dedup_ids:
-            batch_sizes = batch_sizes.join(
+            # keyed off the sizes files themselves: a retry after a crash
+            # between the inv and sizes writes adds whatever ids sizes lacks
+            sizes = sizes.join(
                 spark.read.parquet(f"{path}/sizes").select("id"), "id", "left_anti"
             )
-        batch_sizes.write.mode("append").parquet(f"{path}/sizes")
-        new_inv.unpersist()
-        return NearDupIndex.load(spark, path)
-
-    @staticmethod
-    def _table_name(path: str) -> str:
-        return _catalog_table_name("neardup_idx", path)
-
-    @staticmethod
-    def _norm_location(p: str) -> str:
-        return _norm_catalog_location(p)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "NearDupIndex":
-        meta = spark.read.parquet(f"{path}/meta").first()
-        inv = _ensure_external_bucketed(
-            spark, cls._table_name(path), f"{path}/inv",
-            ["shingle"], int(meta["buckets"]), ["shingle"],
-        )
-        return cls(inv, spark.read.parquet(f"{path}/sizes"), int(meta["n"]))
+        sizes.write.mode("append").parquet(f"{path}/sizes")
+        batch.unpersist()
 
     def pairs_against(
         self,
@@ -1062,9 +1065,7 @@ def minhash_near_duplicates(
         sigs, bands, num_hashes // bands, _cache_registry=cached, hash_fn=hash_fn,
         max_pairs_per_doc=max_pairs_per_doc,
     )
-    return _finalize_release(
-        _verify_pairs(cands, inv, threshold, _cache_registry=cached), cached
-    )
+    return _finalize_release(_verify_pairs(cands, inv, inv, threshold, cached), cached)
 
 
 def minhash_pairs_against(
@@ -1096,7 +1097,7 @@ def minhash_pairs_against(
     statistics define boilerplate — the production shape, where corpus
     document frequencies are known and the new batch streams in) from
     BOTH signature paths; verification recomputes exact Jaccard from the
-    unpruned per-side indexes via the shared `_verified_cross_jaccard`,
+    unpruned per-side indexes via the shared `_verify_pairs`,
     so reported values are exact and a boilerplate-heavy true near-dup
     cannot be under-scored (same guarantee the r6 max_df fix gave the
     n-gram flavor)."""
@@ -1142,9 +1143,7 @@ def minhash_pairs_against(
             .withColumnRenamed("id_a", "new_id")
             .withColumnRenamed("id_b", "corpus_id")
         )
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.append(cands)
-    out = _verified_cross_jaccard(cands, new_inv, corp_inv, threshold)
+    out = _verify_pairs(cands, new_inv, corp_inv, threshold, cached, "new_id", "corpus_id")
     return _finalize_release(out, cached)
 
 
@@ -1729,7 +1728,7 @@ def simhash_dedup_against(
     return _flagged_anti_join(new_df, pairs.select("new_id"), id_col)
 
 
-class SimHashIndex:
+class SimHashIndex(_PersistedIndex):
     """Persisted SimHash dedup index — the lightest member of the
     persisted-index family (:class:`NearDupIndex` stores an inverted
     shingle table; :class:`similarity.IvfIndex` stores vectors; this
@@ -1745,10 +1744,12 @@ class SimHashIndex:
     10^10-doc corpus indexes to ~4x10^10 short rows (a few hundred GB
     of parquet) probed by a scan+join, no corpus text ever read.
 
-    Same catalog/location-verification contract as NearDupIndex
-    (shared `_ensure_external_bucketed`); ``append_save`` grows the
-    index idempotently (already-indexed ids anti-joined out, so a
-    retried batch never double-indexes)."""
+    Save, append, load and drop are :class:`_PersistedIndex`'s, shared
+    with NearDupIndex; ``append_save`` grows the index idempotently
+    (already-indexed ids anti-joined out, so a retried batch never
+    double-indexes)."""
+
+    _PREFIX, _DATA, _CLUSTER = "simhash_idx", "blocks", ("block", "key")
 
     def __init__(self, blocks: DataFrame, hash_fn: str):
         self.blocks = blocks
@@ -1762,79 +1763,19 @@ class SimHashIndex:
         id_col: str = "doc_id",
         hash_fn: str = "xxhash64",
     ) -> "SimHashIndex":
-        sigs = simhash_signatures(corpus_df, text_col, id_col, hash_fn=hash_fn)
-        return cls(_simhash_blocks(sigs, hash_fn), hash_fn)
+        return cls(cls._batch(corpus_df, text_col, id_col, {"hash_fn": hash_fn}), hash_fn)
 
-    @staticmethod
-    def _table_name(path: str) -> str:
-        return _catalog_table_name("simhash_idx", path)
-
-    def save(
-        self, path: str, buckets: int = 64, mode: str = "errorifexists"
-    ) -> "SimHashIndex":
-        """Write the block table bucketed by ``key`` under
-        ``path/blocks`` plus a meta sidecar; returns the reloaded
-        table-backed index so subsequent probes use the bucket
-        layout."""
-        spark = self.blocks.sparkSession
-        name = self._table_name(path)
-        if mode == "overwrite":
-            # saveAsTable(overwrite) on an existing external table keeps
-            # the OLD bucket spec; drop first so `buckets` takes effect
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            self.blocks.write.mode(mode)
-            .option("path", f"{path}/blocks")
-            .bucketBy(buckets, "block", "key")
-            .sortBy("block", "key")
-            .saveAsTable(name)
-        )
-        spark.createDataFrame(
-            [(self.hash_fn, int(buckets))], "hash_fn string, buckets int"
-        ).write.mode(mode).parquet(f"{path}/meta")
-        return SimHashIndex.load(spark, path)
-
-    def append_save(
-        self,
-        path: str,
-        new_df: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        dedup_ids: bool = True,
-    ) -> "SimHashIndex":
-        """Grow the persisted index with a new batch (the ingest-loop
-        maintenance contract, same shape as NearDupIndex.append_save):
-        each batch appends only its own bucketed files, existing data
-        is never rewritten, and ``dedup_ids`` keys the skip off the
-        block table's OWN ids so a crashed-and-retried batch is
-        self-healing."""
-        spark = self.blocks.sparkSession
-        meta = spark.read.parquet(f"{path}/meta").first()
-        name = self._table_name(path)
-        if not spark.catalog.tableExists(name):
-            SimHashIndex.load(spark, path)
-        sigs = simhash_signatures(new_df, text_col, id_col, hash_fn=meta["hash_fn"])
-        blocks = _simhash_blocks(sigs, meta["hash_fn"])
-        if dedup_ids:
-            indexed = spark.table(name).select("id").distinct()
-            blocks = blocks.join(indexed, "id", "left_anti")
-        (
-            blocks.write.mode("append")
-            .option("path", f"{path}/blocks")
-            .bucketBy(int(meta["buckets"]), "block", "key")
-            .sortBy("block", "key")
-            .saveAsTable(name)
-        )
-        return SimHashIndex.load(spark, path)
+    def _meta(self) -> dict:
+        return {"hash_fn": self.hash_fn}
 
     @classmethod
-    def load(cls, spark, path: str) -> "SimHashIndex":
-        meta = spark.read.parquet(f"{path}/meta").first()
-        blocks = _ensure_external_bucketed(
-            spark, cls._table_name(path), f"{path}/blocks",
-            ["block", "key"], int(meta["buckets"]), ["block", "key"],
-        )
+    def _from_table(cls, spark, path: str, blocks: DataFrame, meta: dict) -> "SimHashIndex":
         return cls(blocks, meta["hash_fn"])
+
+    @classmethod
+    def _batch(cls, new_df: DataFrame, text_col: str, id_col: str, meta: dict) -> DataFrame:
+        sigs = simhash_signatures(new_df, text_col, id_col, hash_fn=meta["hash_fn"])
+        return _simhash_blocks(sigs, meta["hash_fn"])
 
     def pairs_against(
         self,
@@ -1958,7 +1899,7 @@ def winnow_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return _finalize_release(_jaccard_from_inter(inter, inv, threshold), [inv])
+    return _finalize_release(_jaccard_from_inter(inter, inv, inv, threshold), [inv])
 
 
 def winnow_dedup(

@@ -2499,6 +2499,117 @@ def test_neardup_index_append_save_grows_and_is_idempotent(spark, tmp_path):
     assert healed.sizes.count() == full_ref.sizes.count()
 
 
+def _index_ids(idx):
+    return {r["id"] for r in getattr(idx, idx._DATA).select("id").distinct().collect()}
+
+
+def _fresh_index_state(spark, cls, path):
+    """(indexed ids, declared bucket count) of the index at ``path`` as
+    a session whose catalog does not know it sees it."""
+    spark.sql(f"DROP TABLE IF EXISTS {cls._table_name(path)}")
+    idx = cls.load(spark, path)
+    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {cls._table_name(path)}").collect()
+    buckets = next(int(r["data_type"]) for r in desc if r["col_name"] == "Num Buckets")
+    return _index_ids(idx), buckets
+
+
+@pytest.mark.parametrize("mode", ["append", "ignore", "errorifexists", "overwrite"])
+@pytest.mark.parametrize("cls_name", ["NearDupIndex", "SimHashIndex"])
+def test_persisted_index_save_modes(spark, sf_dir, tmp_path, cls_name, mode):
+    """Every save mode over a path that already holds an index, for both
+    persisted indexes: append is rejected (append_save grows an index);
+    ignore writes nothing and returns the saved index, also in a session
+    whose catalog does not know it; errorifexists raises before any
+    write; overwrite replaces table, sidecars and meta, also over an
+    index whose meta is an older ``meta/`` parquet directory."""
+    cls = getattr(D, cls_name)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corp_a = docs.filter("doc_id < 30")
+    corp_b = docs.filter("doc_id >= 30 AND doc_id < 60")
+    ids_a = {r["doc_id"] for r in corp_a.select("doc_id").collect()}
+    ids_b = {r["doc_id"] for r in corp_b.select("doc_id").collect()}
+    path = str(tmp_path / "idx")
+    cls.build(corp_a).save(path, buckets=4)
+    other = cls.build(corp_b)
+    if mode == "append":
+        with pytest.raises(ValueError, match="append_save"):
+            other.save(path, buckets=4, mode="append")
+        assert _fresh_index_state(spark, cls, path) == (ids_a, 4)
+    elif mode == "ignore":
+        spark.sql(f"DROP TABLE {cls._table_name(path)}")
+        assert _index_ids(other.save(path, buckets=8, mode="ignore")) == ids_a
+        assert _fresh_index_state(spark, cls, path) == (ids_a, 4)
+    elif mode == "errorifexists":
+        with pytest.raises(FileExistsError):
+            other.save(path, buckets=8)
+        assert _fresh_index_state(spark, cls, path) == (ids_a, 4)
+    else:
+        spark.createDataFrame([(3, 4)], "n int, buckets int").write.mode(
+            "overwrite"
+        ).parquet(f"{path}/meta")
+        got = other.save(path, buckets=8, mode="overwrite")
+        assert _index_ids(got) == ids_b
+        if cls is D.NearDupIndex:
+            assert sorted(r["id"] for r in got.sizes.collect()) == sorted(ids_b)
+        assert _fresh_index_state(spark, cls, path) == (ids_b, 8)
+
+
+@pytest.mark.parametrize("cls_name", ["NearDupIndex", "SimHashIndex"])
+def test_persisted_index_drop_keeps_files(spark, sf_dir, tmp_path, cls_name):
+    """drop() removes the index's catalog entry and keeps its files; a
+    later load() registers them again and probes to the same pairs. The
+    meta.json round trip launches no Spark job."""
+    cls = getattr(D, cls_name)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corp, new = docs.filter("doc_id < 250"), docs.filter("doc_id >= 250")
+    kw = {"threshold": 0.2} if cls is D.NearDupIndex else {"max_hamming": 10}
+    path = str(tmp_path / "idx")
+    name = cls._table_name(path)
+
+    def pairset(idx):
+        return sorted(tuple(r) for r in idx.pairs_against(new, **kw).collect())
+
+    before = pairset(cls.build(corp).save(path, buckets=4))
+    assert before and spark.catalog.tableExists(name)
+    # the meta sidecar is read and written on the driver: no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("meta_io", "meta.json round trip")
+    try:
+        D._write_meta(spark, path, D._read_meta(spark, path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("meta_io")
+    cls.drop(spark, path)
+    assert not spark.catalog.tableExists(name)
+    assert pairset(cls.load(spark, path)) == before
+    cls.drop(spark, path)
+    assert not spark.catalog.tableExists(name)
+
+
+def test_cross_corpus_pairs_across_int_and_string_ids(spark):
+    """A batch with int ids against a corpus with string ids: the planted
+    duplicate pairs up, each side keeps its own id type, and a
+    numeric-looking string id stays as written (union type coercion would
+    cast the string side to int: an error on 'c-9', '007' -> 7)."""
+    dup = "the quick brown fox jumps over the lazy dog near the old river bank"
+    new = spark.createDataFrame(
+        [(1, dup), (2, "an entirely different sentence about spark jobs and query plans")],
+        "doc_id int, text string",
+    )
+    corp = spark.createDataFrame(
+        [("007", dup), ("c-9", "yet another unrelated line of text on the corpus side")],
+        "doc_id string, text string",
+    )
+    for pairs in (
+        D.near_dup_pairs_against(new, corp, threshold=0.5),
+        D.minhash_pairs_against(new, corp, threshold=0.5, max_df=None),
+    ):
+        assert pairs.schema["new_id"].dataType.simpleString() == "int"
+        assert pairs.schema["corpus_id"].dataType.simpleString() == "string"
+        assert [tuple(r) for r in pairs.collect()] == [(1, "007", 1.0)]
+    assert [r["doc_id"] for r in D.dedup_near_against(new, corp).collect()] == [2]
+
+
 def test_null_text_docs_are_never_mutual_duplicates(spark):
     """NULL-text rows share no content: exact dedup must keep them ALL
     (r7 fix — SQL NULL-equality grouping silently collapsed them),
