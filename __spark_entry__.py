@@ -10374,8 +10374,9 @@ def mannwhitney_events_q(spark, sf_dir):
                 ELSE 0 END AS v_n
          FROM ar WHERE d > 0
        ), s AS (
-         SELECT sum(d1)::BIGINT AS o_a, sum(e_n)::BIGINT AS e_n,
-                sum(v_n)::BIGINT AS v_n
+         SELECT coalesce(sum(d1), 0)::BIGINT AS o_a,
+                coalesce(sum(e_n), 0)::BIGINT AS e_n,
+                coalesce(sum(v_n), 0)::BIGINT AS v_n
          FROM terms
        ), cnts AS (
          SELECT sum(CASE WHEN g = '0' THEN 1 ELSE 0 END)::BIGINT AS n_a,

@@ -27,6 +27,7 @@ collect.
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 from dataclasses import replace
 
 import pandas as pd
@@ -56,6 +57,32 @@ DEFAULT_CORR_TH = 0.7
 DEFAULT_N_BINS = 20
 SAMPLE_SIZE = 5000
 RANDOM_SEED = 42
+
+
+@contextmanager
+def _persisted_projections():
+    """Yields ``project(df, columns)``: ``fan_out(df.select(*columns))``
+    LAZILY persisted MEMORY_AND_DISK — its first consumer (the profile
+    aggregate) fills the cache inside its own job, and later jobs read
+    cached, partitioned blocks. Every projection is unpersisted when the
+    block exits, also when a job inside it throws (blocks would
+    otherwise linger until the ContextCleaner gets to them)."""
+    from pyspark.storagelevel import StorageLevel
+
+    from ..operators.partitioning import fan_out
+
+    held: list[DataFrame] = []
+
+    def project(df: DataFrame, columns: list[str]) -> DataFrame:
+        out = fan_out(df.select(*columns)).persist(StorageLevel.MEMORY_AND_DISK)
+        held.append(out)
+        return out
+
+    try:
+        yield project
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 class FedexExplainer(ExplainerBase):
@@ -136,34 +163,21 @@ class FedexExplainer(ExplainerBase):
         source = self._maybe_sample(op.source)
         filter_cols = set(op.predicate.columns()) if op.predicate else {op.attribute}
         candidates = self._candidate_columns(source, exclude=filter_cols)
-        released = None
-        if not self.use_sampling and candidates:
-            # full-data mode consumes the source twice (profile+corr
-            # agg, then the dual histogram) and both partial aggregates
-            # run inside the SCAN stage — on a low-split input (single
-            # row-group file) that is two serial single-task passes.
-            # Fan out + lazily persist the projected source: the
-            # profile agg populates the cache in its own (now parallel)
-            # job and the histogram reads cached blocks (guide
-            # §2.2/§5). Sampling mode already checkpoints its <= 5k-row
-            # sample in _maybe_sample.
-            from pyspark.storagelevel import StorageLevel
-
-            from ..operators.partitioning import fan_out
-
-            keep = [
-                c for c in source.columns
-                if c in set(candidates) | filter_cols
-                or (op.attribute is not None and c == op.attribute)
-            ]
-            source = fan_out(source.select(*keep)).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            released = source
-        # try/finally: a histogram collect that throws must still release
-        # the lazily persisted projection (blocks otherwise linger until
-        # the ContextCleaner gets around to them — r12 VERDICT wart #4)
-        try:
+        with _persisted_projections() as project:
+            if not self.use_sampling and candidates:
+                # full-data mode consumes the source twice (profile+corr
+                # agg, then the dual histogram) and both partial aggregates
+                # run inside the SCAN stage — on a low-split input (single
+                # row-group file) that is two serial single-task passes.
+                # The fanned, persisted projection fills the cache in the
+                # profile agg's own (now parallel) job and the histogram
+                # reads cached blocks (guide §2.2/§5). Sampling mode already
+                # checkpoints its <= 5k-row sample in _maybe_sample.
+                source = project(source, [
+                    c for c in source.columns
+                    if c in set(candidates) | filter_cols
+                    or (op.attribute is not None and c == op.attribute)
+                ])
             profiles = profile_columns(source, candidates, corr_anchor=op.attribute)
             # columns correlated with the filter attribute are pruned
             corr = {
@@ -173,14 +187,10 @@ class FedexExplainer(ExplainerBase):
             profiles = {c: p for c, p in profiles.items() if c not in corr}
             if not profiles:
                 return Explanation(kind="fedex-filter", query=op.query_string())
+            # collected (pandas): the projection's last consumer
             hist = dual_histogram_predicate(
                 source, op.predicate.to_spark(source), profiles, self.n_bins
             )
-        finally:
-            # dual_histogram_predicate collects (pandas) — no further
-            # consumers of the cached projection
-            if released is not None:
-                released.unpersist()
         items, scores = self._score_histogram(hist, profiles, side=None)
         exp = Explanation(
             kind="fedex-filter", query=op.query_string(), items=items[: self.top_k], scores=scores
@@ -214,68 +224,48 @@ class FedexExplainer(ExplainerBase):
 
     def _explain_shapley(self) -> Explanation:
         """2-player Shapley: each side's value is its own marginal
-        deviation. Both sides' dual histograms run as ONE Spark job
-        (``shapley_dual_histograms``): the per-side flavor recomputed
-        and rescanned the join RESULT twice — the dominant cost of this
-        pipeline at sf0.1 (VERDICT r10 task #6). Scores, tie-breaks, and
-        rendered text are unchanged: identical profiles, identical
-        per-(attribute, bin) counts, same ``_score_histogram``."""
-        from ..operators.partitioning import fan_out
-
+        deviation. Both sides' dual histograms come from ONE histogram
+        query, collected once: in full-data mode the weighted flavor
+        (``shapley_dual_histograms_weighted``: each side weighted by the
+        other side's join-key counts, no join result); in sampling mode
+        the union flavor (``shapley_dual_histograms``: the sampled sides
+        against the recorded result). Both run the one dual-histogram
+        kernel of histograms.py; scores, tie-breaks and rendered text come
+        from the same per-(attribute, bin) counts and ``_score_histogram``."""
         op: JoinOp = self.op
         rebuild = not self.use_sampling
-        released: list = []
 
-        def _prep(consider: str):
+        def _prep(consider: str, project):
             side_df, side_name = self._join_side(consider)
             side_df = self._maybe_sample(side_df)
             candidates = self._candidate_columns(side_df, exclude=set(op.on))
             if candidates and rebuild:
                 # the profile agg, the histogram branch, AND the other
-                # side's key-count table all consume this side: persist
-                # the narrow fanned projection (+ join keys) so every
-                # later job reads cached partitioned blocks instead of
-                # re-decoding a possibly single-partition parquet scan
-                # serially. LAZY persist (r12, was an eager
-                # checkpoint): the profile aggregate below is the first
-                # consumer and populates the cache inside its own job —
-                # one full materialization pass per side deleted from
-                # the pipeline. Sampling mode already checkpoints
-                # inside _maybe_sample; blocks are unpersisted once the
-                # histograms are collected.
-                from pyspark.storagelevel import StorageLevel
-
-                keep = list(dict.fromkeys(candidates + list(op.on)))
-                side_df = fan_out(side_df.select(*keep)).persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                released.append(side_df)
+                # side's key-count table all consume this side: the
+                # persisted projection (+ join keys) is filled by the
+                # profile agg below, its first consumer, and every later
+                # job reads cached partitioned blocks instead of
+                # re-decoding a possibly single-partition parquet scan.
+                # Sampling mode already checkpoints inside _maybe_sample.
+                side_df = project(side_df, list(dict.fromkeys(candidates + list(op.on))))
             profiles = profile_columns(side_df, candidates)
             rename = {c: f"{side_name}_{c}" for c in candidates}
             return (side_df, profiles, rename)
 
-        # the two sides are independent single-job pipelines — overlap
-        # them (guide §2.6): the second side's scan back-fills executor
-        # slots freed by the first side's tail
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut = {c: pool.submit(_prep, c) for c in ("left", "right")}
-            prepped = {c: f.result() for c, f in fut.items()}
-        left_df, lp, lr = prepped["left"]
-        right_df, rp, rr = prepped["right"]
         per_side: dict[str, tuple[list, dict]] = {}
-        # try/finally: a histogram job that throws must still release the
-        # lazily persisted side projections (r12 VERDICT wart #4 — the
-        # blocks otherwise leak until the ContextCleaner)
-        try:
+        with _persisted_projections() as project:
+            # the two sides are independent single-job pipelines — overlap
+            # them (guide §2.6): the second side's scan back-fills executor
+            # slots freed by the first side's tail
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fut = {c: pool.submit(_prep, c, project) for c in ("left", "right")}
+                prepped = {c: f.result() for c, f in fut.items()}
+            left_df, lp, lr = prepped["left"]
+            right_df, rp, rr = prepped["right"]
             if lp or rp:
                 if rebuild:
-                    # weighted flavor: result-side counts derive from each
-                    # side's join-key multiplicities — the rebuilt-join +
-                    # third-explode branch this pipeline used to run is
-                    # gone entirely (identical counts; see
-                    # shapley_dual_histograms_weighted)
                     hist = shapley_dual_histograms_weighted(
                         left_df, right_df, list(op.on), op.how, lp, rp, self.n_bins
                     )
@@ -294,12 +284,6 @@ class FedexExplainer(ExplainerBase):
                     per_side[consider] = self._score_histogram(
                         sub, profiles, side=consider
                     )
-        finally:
-            # the histograms are collected (pandas) — the cached side
-            # projections have no further consumers
-            for df in released:
-                df.unpersist()
-            released.clear()
         l_items, l_scores = per_side.get("left", ([], {}))
         r_items, r_scores = per_side.get("right", ([], {}))
         left = Explanation(kind="fedex-join", query=op.query_string(),

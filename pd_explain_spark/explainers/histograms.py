@@ -16,19 +16,27 @@ anchor). Its callers read it two ways:
 
 The reference's FEDEX kernel loops per column in pandas; here ONE Spark
 job computes (column, bin) -> (source_count, result_count) for every
-candidate column at once:
+candidate column at once, through ONE kernel, ``_dual_histogram``:
 
-  explode(array(struct(attr, bin) per column)) -> groupBy(attr, bin)
+  per branch: narrow select -> fan_out -> explode(array(struct(attr, bin)))
+              next to per-row weights
+  union of the branches -> groupBy(attr, bin) -> sum of each weight
 
 The exploded stream collapses via map-side partial aggregation to at most
 n_columns * n_bins rows per task, so the shuffle is tiny regardless of
 input size — this is the plan that survives a 100x scale-up (no per-column
-rescans of a 100 TB table).
-
-Two flavors:
- * predicate fast path (filters): a single scan of the source, counting
-   each row once for src and conditionally for res — zero extra I/O.
- * union path (joins / arbitrary result): source tagged 0, result tagged 1.
+rescans of a 100 TB table). The four public flavors are compositions of
+branches, with weights (src, res[, unmatched]):
+ * predicate (filters): one branch over the source weighted (1, keep) —
+   a single scan, zero extra I/O;
+ * union (joins / arbitrary result): the source branch (1, 0) plus the
+   result branch (0, 1);
+ * Shapley union: the left and right branches (1, 0) plus one result
+   branch (0, 1) binning both sides' columns;
+ * Shapley weighted: the left and right branches, each joined to the
+   other side's key counts, weighted (1, w, unmatched) — no join result.
+Result branches bind bin expressions to the result's column names
+(``_pairs``), never by a physical rename.
 
 Binning: numeric columns get equi-width bins (``bin_index``, shared with
 the outlier explainer) over the profiled range; everything else
@@ -40,6 +48,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -82,18 +91,27 @@ def profile_columns(
         return {}
     schema = {f.name: f.dataType for f in df.schema.fields}
     numeric = {c for c in columns if is_numeric_type(schema[c])}
-    exprs: list[Column] = []
+
+    def q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    # each aggregate is ONE SQL expression string: building the same
+    # Columns through the functions API costs ~8 driver->JVM round trips
+    # per aggregate, which outweighs the job itself on a small input
+    exprs: list[str] = []
     for c in columns:
-        exprs.append(F.approx_count_distinct(c).alias(f"{c}__d"))
+        exprs.append(f"approx_count_distinct({q(c)}) AS {q(c + '__d')}")
         if c in numeric:
-            exprs.append(F.min(c).cast("double").alias(f"{c}__lo"))
-            exprs.append(F.max(c).cast("double").alias(f"{c}__hi"))
+            exprs.append(f"CAST(min({q(c)}) AS DOUBLE) AS {q(c + '__lo')}")
+            exprs.append(f"CAST(max({q(c)}) AS DOUBLE) AS {q(c + '__hi')}")
     corr_cols: list[str] = []
     if corr_anchor in schema and is_numeric_type(schema[corr_anchor]):
         corr_cols = [c for c in columns if c in numeric and c != corr_anchor]
-        anchor = F.col(corr_anchor).cast("double")
-        exprs += [F.corr(anchor, F.col(c).cast("double")).alias(f"{c}__corr") for c in corr_cols]
-    row = df.agg(*exprs).first().asDict()
+        exprs += [
+            f"corr(CAST({q(corr_anchor)} AS DOUBLE), CAST({q(c)} AS DOUBLE)) AS {q(c + '__corr')}"
+            for c in corr_cols
+        ]
+    row = df.agg(*[F.expr(e) for e in exprs]).first().asDict()
     out: dict[str, ColumnProfile] = {}
     for c in columns:
         distinct = row[f"{c}__d"] or 0
@@ -127,15 +145,10 @@ def bin_index(v: Column, lo: float, hi: float, n_bins: int) -> Column:
     )
 
 
-def _bin_expr(df: DataFrame, prof: ColumnProfile, n_bins: int) -> Column:
-    """String bin key for one column of ``df`` (see ``_bin_expr_col``)."""
-    return _bin_expr_col(df[prof.name], prof, n_bins)
-
-
 def _bin_expr_col(c: Column, prof: ColumnProfile, n_bins: int) -> Column:
-    """String bin key for an arbitrary source column: numeric ->
-    zero-padded bucket index, categorical -> the value itself (padded
-    index keeps lexical == numeric order)."""
+    """String bin key of column ``c``: numeric -> zero-padded bucket
+    index, categorical -> the value itself (padded index keeps lexical ==
+    numeric order)."""
     edges = prof.bin_edges(n_bins)
     if prof.is_numeric and edges is not None:
         idx = bin_index(c, float(prof.vmin), float(prof.vmax), n_bins)
@@ -143,29 +156,81 @@ def _bin_expr_col(c: Column, prof: ColumnProfile, n_bins: int) -> Column:
     return F.coalesce(c.cast("string"), F.lit(NULL_TOKEN))
 
 
+def _bin_structs(pairs: list, n_bins: int) -> Column:
+    """``array(struct(attribute, bin))`` over ``pairs`` of (attribute
+    label, column name, profile) — exploded, one row per input row and
+    attribute."""
+    return F.array(*[
+        F.struct(F.lit(a).alias("attribute"), _bin_expr_col(F.col(n), p, n_bins).alias("bin"))
+        for a, n, p in pairs
+    ])
+
+
+def _pairs(
+    df: DataFrame, profiles: dict[str, ColumnProfile], rename: dict[str, str] | None = None,
+    prefix: str = "",
+) -> list:
+    """(``prefix`` + column, its name in ``df``, profile) per profile,
+    bound BY NAME: ``rename`` maps a source name to its name in ``df``
+    (the join prefix contract), falling back to the source name; a
+    column ``df`` holds under neither name is skipped. Binding by name,
+    never by a physical rename, keeps a result that holds both
+    ``<side>_x`` and a bare ``x`` unambiguous."""
+    rename, cols = rename or {}, set(df.columns)
+    out = []
+    for c, p in profiles.items():
+        name = rename.get(c, c)
+        name = name if name in cols else (c if c in cols else None)
+        if name is not None:
+            out.append((prefix + c, name, p))
+    return out
+
+
+def _dual_histogram(
+    branches: list, n_bins: int, names: tuple = ("src_cnt", "res_cnt")
+) -> DataFrame:
+    """The one dual-histogram kernel (module docstring). A branch is
+    ``(frame, pairs, weights)`` or ``(frame, pairs, weights, (counts,
+    on))``: ``frame`` is projected to the columns of ``pairs`` and
+    fanned out FIRST — the explode fans each row out once per attribute
+    and is the CPU bottleneck on a narrow local read; the conditional
+    exchange carries only the binned columns and is a no-op on an
+    already-wide scan — then exploded to (attribute, bin) rows next to
+    the row's ``weights`` (Columns or int literals). The weights are
+    evaluated in the projection; with ``(counts, on)`` the fanned
+    projection (plus ``on``) is first left-joined to that key-count
+    table and the weights read the joined rows. The histogram groups
+    the union of the branches by (attribute, bin) and sums weight i as
+    ``names[i]``."""
+    from ..operators.partitioning import fan_out
+
+    streams = []
+    for df, pairs, weights, *join in branches:
+        cols = list(dict.fromkeys(n for _, n, _ in pairs))
+        ws = [(F.lit(w) if isinstance(w, int) else w).alias(f"__w{i}") for i, w in enumerate(weights)]
+        if join:
+            counts, on = join[0]
+            rows = fan_out(df.select(*dict.fromkeys(cols + on))).join(counts, on=on, how="left")
+        else:
+            rows = fan_out(df.select(*cols, *ws))
+            ws = [f"__w{i}" for i in range(len(ws))]
+        streams.append(rows.select(F.explode(_bin_structs(pairs, n_bins)).alias("s"), *ws))
+    return (
+        reduce(DataFrame.unionByName, streams)
+        .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"))
+        .agg(*[F.sum(f"__w{i}").alias(n) for i, n in enumerate(names)])
+    )
+
+
 def dual_histogram_predicate_df(
     source: DataFrame, predicate: Column, profiles: dict[str, ColumnProfile], n_bins: int = 20
 ) -> DataFrame:
-    """Filter fast path as a (tiny) Spark DataFrame: one scan of `source`;
-    res_cnt counts rows passing the recorded predicate. Schema:
-    (attribute, bin, src_cnt, res_cnt)."""
-    from ..operators.partitioning import fan_out
-
-    # project to the candidate columns + keep flag FIRST, then widen: the
-    # explode below fans each row out 16x and is the CPU bottleneck on a
-    # narrow local read — the conditional exchange carries only the
-    # profiled columns and is a no-op on an already-wide cluster scan
-    keep = F.when(predicate, F.lit(1)).otherwise(F.lit(0)).alias("__keep")
-    narrow = fan_out(source.select(*[F.col(c) for c in profiles], keep))
-    structs = [
-        F.struct(F.lit(c).alias("attribute"), _bin_expr(narrow, p, n_bins).alias("bin"))
-        for c, p in profiles.items()
-    ]
-    exploded = narrow.select(F.explode(F.array(*structs)).alias("s"), "__keep")
-    return (
-        exploded.groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"))
-        .agg(F.count(F.lit(1)).alias("src_cnt"), F.sum("__keep").alias("res_cnt"))
-    )
+    """Filter fast path as a (tiny) Spark DataFrame: ONE branch over
+    ``source`` weighted (1, keep) — one scan, res_cnt counts the rows
+    passing the recorded predicate. Schema: (attribute, bin, src_cnt,
+    res_cnt)."""
+    keep = F.when(predicate, F.lit(1)).otherwise(F.lit(0))
+    return _dual_histogram([(source, _pairs(source, profiles), (1, keep))], n_bins)
 
 
 def dual_histogram_predicate(
@@ -183,36 +248,18 @@ def dual_histogram_union_df(
     n_bins: int = 20,
     result_rename: dict[str, str] | None = None,
 ) -> DataFrame:
-    """General path (joins) as a (tiny) Spark DataFrame: source tagged
-    side=0, result side=1. ``result_rename`` maps source column name ->
-    its name in the result (the join prefix contract)."""
-    result_rename = result_rename or {}
-
-    from ..operators.partitioning import fan_out
-
-    def tagged(df: DataFrame, side: int, rename: dict[str, str]) -> DataFrame:
-        sel = df
-        for src_name, res_name in rename.items():
-            if res_name != src_name and res_name in sel.columns:
-                sel = sel.withColumnRenamed(res_name, src_name)
-        # narrow projection before the conditional widen (see predicate path)
-        sel = fan_out(sel.select(*[F.col(c) for c in profiles if c in sel.columns]))
-        avail = [c for c in profiles if c in sel.columns]
-        structs = [
-            F.struct(F.lit(c).alias("attribute"), _bin_expr(sel, profiles[c], n_bins).alias("bin"))
-            for c in avail
-        ]
-        return sel.select(F.explode(F.array(*structs)).alias("s"), F.lit(side).alias("__side"))
-
-    both = tagged(source, 0, {}).unionByName(tagged(result, 1, result_rename))
-    hist = (
-        both.groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"))
-        .agg(
-            F.sum(F.when(F.col("__side") == 0, 1).otherwise(0)).alias("src_cnt"),
-            F.sum(F.when(F.col("__side") == 1, 1).otherwise(0)).alias("res_cnt"),
-        )
+    """General path (joins) as a (tiny) Spark DataFrame: the source
+    branch weighted (1, 0) plus the result branch weighted (0, 1).
+    ``result_rename`` maps source column name -> its name in the result
+    (the join prefix contract); the result branch binds by name
+    (``_pairs``)."""
+    return _dual_histogram(
+        [
+            (source, _pairs(source, profiles), (1, 0)),
+            (result, _pairs(result, profiles, result_rename), (0, 1)),
+        ],
+        n_bins,
     )
-    return hist
 
 
 def dual_histogram_union(
@@ -244,10 +291,10 @@ def shapley_dual_histograms_weighted(
     multiplicity m(key) (rows of the other side sharing the key) —
     plus, for outer flavors, one null-extension count landing in the
     OPPOSITE side's NULL bin per unmatched retained row. So the result
-    branch of ``shapley_dual_histograms_union`` (a rebuilt join scanned
+    branch of ``shapley_dual_histograms`` (a rebuilt join scanned
     through a third explode) collapses into per-row weights on the two
-    side scans: src_cnt = count(*), res_cnt = sum(weight), computed in
-    the SAME exploded stream. Weight per side row:
+    side branches, each joined to the other side's key counts and
+    weighted (1, w, unmatched). Weight w per side row:
 
       inner          -> m          (unmatched rows vanish)
       side retained  -> max(m, 1)  (unmatched rows survive once)
@@ -257,12 +304,12 @@ def shapley_dual_histograms_weighted(
     entirely when AQE broadcasts the (key, m) count tables — the
     100 TB plan is two weighted scans plus two tiny key-count
     aggregates. Counts are bit-identical to the union flavor (same
-    multiplicities, same null-extension, same ``_bin_expr`` keys).
+    multiplicities, same null-extension, same bin keys).
 
     Returns the collected pandas frame (attribute prefixed
     ``left:``/``right:``), at most (n_left + n_right) * 2 * n_bins rows.
     """
-    from ..operators.partitioning import fan_out
+    import pandas as pd
 
     on = list(on)
     h = (how or "inner").lower().replace("_", "")
@@ -277,49 +324,23 @@ def shapley_dual_histograms_weighted(
 
     lk = left.groupBy(*on).agg(F.count(F.lit(1)).cast("bigint").alias("__m"))
     rk = right.groupBy(*on).agg(F.count(F.lit(1)).cast("bigint").alias("__m"))
-
-    def side_hist(df: DataFrame, other_keys: DataFrame, profiles, prefix, retained):
-        avail = [c for c in profiles if c in df.columns]
-        if not avail:
-            return None
-        keep = list(dict.fromkeys(avail + on))
-        sel = fan_out(df.select(*[F.col(c) for c in keep]))
-        j = sel.join(other_keys, on=on, how="left")
-        m = F.coalesce(F.col("__m"), F.lit(0)).cast("bigint")
-        w = F.greatest(m, F.lit(1)) if retained else m
-        structs = [
-            F.struct(
-                F.lit(prefix + c).alias("attribute"),
-                _bin_expr_col(F.col(c), profiles[c], n_bins).alias("bin"),
-            )
-            for c in avail
-        ]
-        return (
-            j.select(
-                F.explode(F.array(*structs)).alias("s"),
-                w.alias("__w"),
-                (m == 0).cast("bigint").alias("__um"),
-            )
-            .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"))
-            .agg(
-                F.count(F.lit(1)).alias("src_cnt"),
-                F.sum("__w").alias("res_cnt"),
-                # unmatched-row census rides the same aggregate: summed
-                # over one attribute's bins it is the side's unmatched
-                # row count, which prices the null extension below with
-                # ZERO extra jobs
-                F.sum("__um").alias("__unmatched"),
-            )
-        )
-
-    lh = side_hist(left, rk, left_profiles, "left:", l_retained)
-    rh = side_hist(right, lk, right_profiles, "right:", r_retained)
-    if lh is None and rh is None:
-        import pandas as pd
-
+    m = F.coalesce(F.col("__m"), F.lit(0)).cast("bigint")
+    branches = []
+    for df, profiles, other_keys, prefix, retained in (
+        (left, left_profiles, rk, "left:", l_retained),
+        (right, right_profiles, lk, "right:", r_retained),
+    ):
+        pairs = _pairs(df, profiles, prefix=prefix)
+        if pairs:
+            w = F.greatest(m, F.lit(1)) if retained else m
+            # the unmatched-row census rides the same aggregate: summed
+            # over one attribute's bins it is the side's unmatched row
+            # count, which prices the null extension below with ZERO
+            # extra jobs
+            branches.append((df, pairs, (1, w, (m == 0).cast("bigint")), (other_keys, on)))
+    if not branches:
         return pd.DataFrame(columns=["attribute", "bin", "src_cnt", "res_cnt"])
-    both = lh.unionByName(rh) if lh is not None and rh is not None else (lh or rh)
-    pdf = both.toPandas()
+    pdf = _dual_histogram(branches, n_bins, ("src_cnt", "res_cnt", "__unmatched")).toPandas()
 
     def unmatched_of(prefix: str, own_keys: DataFrame, other_keys: DataFrame) -> int:
         sub = pdf[pdf["attribute"].str.startswith(prefix)]
@@ -334,8 +355,6 @@ def shapley_dual_histograms_weighted(
             .first()
         )
         return int(row["n"])
-
-    import pandas as pd
 
     ext_rows = []
     # retained-but-unmatched LEFT rows extend the result with NULLs on
@@ -379,67 +398,26 @@ def shapley_dual_histograms(
     2-player join Shapley needs (side vs result) histograms for the left
     AND right inputs, and running ``dual_histogram_union`` per side scans
     (and recomputes) the join RESULT twice — the dominant cost of the
-    shapley explainer at scale. Here the result is scanned once,
-    exploding both profile sets off the same rows; attribute keys are
-    prefixed ``left:<col>`` / ``right:<col>`` (the two sides may share a
-    column name). Returns the collected pandas frame (at most
-    (n_left + n_right) * 2 * n_bins rows).
-
-    The result branch binds bin expressions directly to the result's
-    column names (``*_rename`` maps source name -> result name, the join
-    prefix contract) — a physical rename like ``dual_histogram_union``'s
-    could collide when both sides contribute the same source name."""
-    from ..operators.partitioning import fan_out
-
-    left_rename = left_rename or {}
-    right_rename = right_rename or {}
-
-    def side_branch(df: DataFrame, profiles, prefix: str) -> DataFrame:
-        avail = [c for c in profiles if c in df.columns]
-        sel = fan_out(df.select(*[F.col(c) for c in avail]))
-        structs = [
-            F.struct(
-                F.lit(prefix + c).alias("attribute"),
-                _bin_expr(sel, profiles[c], n_bins).alias("bin"),
-            )
-            for c in avail
-        ]
-        return sel.select(F.explode(F.array(*structs)).alias("s"), F.lit(0).alias("__side"))
-
-    pairs = []  # (prefixed attribute, result column name, profile)
-    for profiles, rename, prefix in (
-        (left_profiles, left_rename, "left:"),
-        (right_profiles, right_rename, "right:"),
-    ):
-        for c, p in profiles.items():
-            rn = rename.get(c, c)
-            name = rn if rn in result.columns else (c if c in result.columns else None)
-            if name is not None:
-                pairs.append((prefix + c, name, p))
-    res_sel = fan_out(result.select(*sorted({n for _, n, _ in pairs})))
-    res_structs = [
-        F.struct(
-            F.lit(a).alias("attribute"),
-            _bin_expr_col(res_sel[n], p, n_bins).alias("bin"),
-        )
-        for a, n, p in pairs
-    ]
-    res_branch = res_sel.select(
-        F.explode(F.array(*res_structs)).alias("s"), F.lit(1).alias("__side")
-    )
-    both = (
-        side_branch(left, left_profiles, "left:")
-        .unionByName(side_branch(right, right_profiles, "right:"))
-        .unionByName(res_branch)
-    )
-    return (
-        both.groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"))
-        .agg(
-            F.sum(F.when(F.col("__side") == 0, 1).otherwise(0)).alias("src_cnt"),
-            F.sum(F.when(F.col("__side") == 1, 1).otherwise(0)).alias("res_cnt"),
-        )
-        .toPandas()
-    )
+    shapley explainer at scale. Here the left and right branches
+    (weights (1, 0)) join ONE result branch (weights (0, 1)) that bins
+    both profile sets off the same rows; attribute keys are prefixed
+    ``left:<col>`` / ``right:<col>`` (the two sides may share a column
+    name), and ``*_rename`` maps source name -> result name (bound by
+    name, ``_pairs``). Returns the collected pandas frame (at most
+    (n_left + n_right) * 2 * n_bins rows)."""
+    return _dual_histogram(
+        [
+            (left, _pairs(left, left_profiles, prefix="left:"), (1, 0)),
+            (right, _pairs(right, right_profiles, prefix="right:"), (1, 0)),
+            (
+                result,
+                _pairs(result, left_profiles, left_rename, "left:")
+                + _pairs(result, right_profiles, right_rename, "right:"),
+                (0, 1),
+            ),
+        ],
+        n_bins,
+    ).toPandas()
 
 
 def bin_label(prof: ColumnProfile, bin_key: str, n_bins: int) -> str:

@@ -345,14 +345,11 @@ class ManyToOneExplainer(ExplainerBase):
         """Info gain of each binned attribute about the label, all attributes
         in one exploded groupBy pass. Returns (ranked attrs, joint pandas
         histogram (attribute, bin, __label, cnt))."""
-        from .histograms import _bin_expr
+        from .histograms import _bin_structs
 
-        structs = [
-            F.struct(F.lit(c).alias("attribute"), _bin_expr(labeled, p, self.n_bins).alias("bin"))
-            for c, p in profiles.items()
-        ]
+        structs = _bin_structs([(c, c, p) for c, p in profiles.items()], self.n_bins)
         joint = (
-            labeled.select(F.explode(F.array(*structs)).alias("s"), "__label")
+            labeled.select(F.explode(structs).alias("s"), "__label")
             .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"), "__label")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .toPandas()

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ..core.operations import FilterOp, GroupByOp, JoinOp
 from ..operators.sampling import maybe_sample
 from .base import Explanation, ExplanationItem, ExplainerBase
-from .histograms import NULL_TOKEN, _bin_expr, bin_label, profile_columns
+from .histograms import NULL_TOKEN, _bin_expr_col, bin_label, profile_columns
 
 RANDOM_SEED = 42  # reference metainsight_explainer.py:31
 MIN_COMMONNESS = 0.5  # ibid:45-53
@@ -446,7 +446,7 @@ class MetaInsightExplainer(ExplainerBase):
             def dim_expr(col: str):
                 p = profiles.get(col)
                 if p is not None and p.is_numeric:
-                    return _bin_expr(df, p, self.n_bins)
+                    return _bin_expr_col(F.col(col), p, self.n_bins)
                 return F.coalesce(F.col(col).cast("string"), F.lit(NULL_TOKEN))
 
             dims_needed = sorted({d for p in pairs for d in p})

@@ -678,7 +678,9 @@ class _PersistedIndex:
         ``mode``: ``errorifexists`` (``error``) raises before any write
         when an index is already at ``path``; ``ignore`` then writes
         nothing and returns the saved index; ``overwrite`` replaces its
-        table, sidecars and meta. ``append`` is rejected: grow a saved
+        table, sidecars and meta, and raises ``ValueError`` before any
+        drop or write when the index's own rows are read from ``path``
+        (an index loaded from it). ``append`` is rejected: grow a saved
         index with :meth:`append_save`, which keeps its bucket spec and
         skips already-indexed ids."""
         spark = getattr(self, self._DATA).sparkSession
@@ -697,6 +699,19 @@ class _PersistedIndex:
             if mode == "ignore":
                 return self.load(spark, path)
             raise FileExistsError(f"{type(self).__name__}.save: {path!r} holds an index")
+        from urllib.parse import urlparse
+
+        fs, jp = _hadoop_path(spark, path)
+        root = fs.makeQualified(jp).toUri().getPath().rstrip("/") + "/"
+        # the scan's file listing is local metadata: no Spark job
+        if any(
+            (urlparse(f).path or f).startswith(root)
+            for f in getattr(self, self._DATA).inputFiles()
+        ):
+            raise ValueError(
+                f"{type(self).__name__}.save: the index's rows are read from {path!r}, "
+                "which an overwrite empties before it reads them; save to another path"
+            )
         # drop first: saveAsTable(overwrite) on an existing external table
         # keeps the OLD bucket spec, and an entry whose files are gone
         # would fail the write

@@ -1134,12 +1134,16 @@ def log_rank_test(
         F.col("__n") > 1,
         d * (n1 / n) * (F.lit(1.0) - n1 / n) * (n - d) / (n - F.lit(1.0)),
     ).otherwise(F.lit(0.0))
+    # no event at all leaves ``risk`` empty: O, E and V are then sums
+    # over no duration, 0 — not NULL (chi2/z stay NULL: V = 0)
     summed = risk.agg(
-        F.sum("__d1").cast("bigint").alias("o_a"),
-        F.sum(F.floor(e_t * F.lit(float(nano)) + F.lit(0.5)).cast("bigint"))
-        .cast("bigint").alias("__e_nano"),
-        F.sum(F.floor(v_t * F.lit(float(nano)) + F.lit(0.5)).cast("bigint"))
-        .cast("bigint").alias("__v_nano"),
+        F.coalesce(F.sum("__d1"), F.lit(0)).cast("bigint").alias("o_a"),
+        F.coalesce(
+            F.sum(F.floor(e_t * F.lit(float(nano)) + F.lit(0.5)).cast("bigint")), F.lit(0)
+        ).cast("bigint").alias("__e_nano"),
+        F.coalesce(
+            F.sum(F.floor(v_t * F.lit(float(nano)) + F.lit(0.5)).cast("bigint")), F.lit(0)
+        ).cast("bigint").alias("__v_nano"),
     )
     counts = subj.crossJoin(F.broadcast(meta)).agg(
         F.sum((F.col("__g") == F.col("__ga")).cast("bigint"))

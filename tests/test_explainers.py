@@ -408,6 +408,42 @@ def test_join_kernel_table_histogram_reconciles(spark):
     assert np.allclose(t["ks"].to_numpy(), round(float(np.max(np.abs(delta))), 6), atol=1e-6)
 
 
+
+def test_join_explain_binds_result_columns_by_name(spark):
+    """A left column ``orders_total`` lands in the join result as
+    ``li_orders_total`` next to the right side's ``total`` ->
+    ``orders_total``. The left-side histogram must bin the prefixed
+    column (no rename into a duplicate name): explain works in both
+    modes, and the histogram equals the one of the same join with the
+    column renamed apart."""
+    from pd_explain_spark.explainers.fedex import join_kernel_table
+
+    rows = [(i % 50, float(i % 23), float((i * 7) % 31)) for i in range(300)]
+    right = to_explainable(
+        spark.createDataFrame([(k, float(k * 3 % 17)) for k in range(0, 50, 2)], "k bigint, total double"),
+        name="orders",
+    )
+
+    def joined(col):
+        left = spark.createDataFrame(rows, f"k bigint, v double, {col} double")
+        return to_explainable(left, name="li").merge(right, on="k")
+
+    j, j_apart = joined("orders_total"), joined("ot")
+    assert {"li_orders_total", "orders_total"} <= set(j.df.columns)
+    assert "orders_total" in j.explain(consider="left", use_sampling=True).scores
+    exp = j.explain(consider="left")
+    ref = j_apart.explain(consider="left")
+    assert exp.scores["orders_total"] == ref.scores["ot"]
+    assert exp.scores["v"] == ref.scores["v"]
+    got = join_kernel_table(j, ["orders_total"]).toPandas()
+    want = join_kernel_table(j_apart, ["ot"]).toPandas()
+    key = ["bin", "src_cnt", "res_cnt", "cum_delta", "ks"]
+    assert set(got["attribute"]) == {"orders_total"}
+    assert got[key].sort_values("bin").reset_index(drop=True).equals(
+        want[key].sort_values("bin").reset_index(drop=True)
+    )
+    assert got["res_cnt"].sum() == j.df.count()
+
 def test_many_to_one_kernel_table_stats(spark):
     """Level-1 rule stats: coverage/separation reconcile with direct
     counting on a planted frame."""
@@ -564,6 +600,70 @@ def test_shapley_weighted_histograms_match_union_flavor(spark):
         n = new.groupby(key)[["src_cnt", "res_cnt"]].sum().sort_index()
         assert o.equals(n.astype(o.dtypes.to_dict())), f"how={how} diverged"
 
+
+
+def _job_count(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches."""
+    sc = spark.sparkContext
+    group = f"jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dual_histogram_job_counts(spark):
+    """Jobs each dual-histogram flavor launches on a small fixture. The
+    weighted flavor's two side branches feed one groupBy, so one
+    shuffle stage for both sides."""
+    from pyspark.sql import functions as F
+
+    from pd_explain_spark.explainers.histograms import (
+        dual_histogram_predicate,
+        dual_histogram_union,
+        profile_columns,
+        shapley_dual_histograms,
+        shapley_dual_histograms_weighted,
+    )
+
+    left = spark.createDataFrame(
+        [(1, 10.0, "a"), (1, 11.0, "b"), (2, None, "a"), (3, 30.0, None),
+         (None, 40.0, "c")] + [(5 + i, float(i), "x") for i in range(20)],
+        "k bigint, lv double, lc string",
+    )
+    right = spark.createDataFrame(
+        [(1, 100.0), (2, 200.0), (2, 210.0), (4, 400.0), (None, 500.0)]
+        + [(5 + i, float(i * 10)) for i in range(10)],
+        "k bigint, rv double",
+    )
+    lp = profile_columns(left, ["lv", "lc"])
+    rp = profile_columns(right, ["rv"])
+    res = left.selectExpr("k", "lv AS l_lv", "lc AS l_lc").join(
+        right.selectExpr("k", "rv AS r_rv"), on=["k"], how="left"
+    )
+    lr, rr = {"lv": "l_lv", "lc": "l_lc"}, {"rv": "r_rv"}
+    cases = {
+        "predicate": (lambda: dual_histogram_predicate(left, F.col("lv") > 5, lp), 2),
+        "union": (lambda: dual_histogram_union(left, res, lp, result_rename=lr), 9),
+        "shapley_union": (
+            lambda: shapley_dual_histograms(
+                left, right, res, lp, rp, left_rename=lr, right_rename=rr
+            ),
+            9,
+        ),
+        "weighted": (
+            lambda: shapley_dual_histograms_weighted(left, right, ["k"], "left", lp, rp), 8
+        ),
+        # no left candidates: the right side's null extension is priced
+        # by the key-count anti-join fallback
+        "weighted_no_left": (
+            lambda: shapley_dual_histograms_weighted(left, right, ["k"], "left", {}, rp), 10
+        ),
+    }
+    got = {name: _job_count(spark, fn) for name, (fn, _) in cases.items()}
+    assert got == {name: want for name, (_, want) in cases.items()}
 
 def test_shapley_weighted_histograms_one_side_without_candidates(spark):
     """When a side has no candidate columns, the opposite side's null

@@ -2586,6 +2586,29 @@ def test_persisted_index_drop_keeps_files(spark, sf_dir, tmp_path, cls_name):
     assert not spark.catalog.tableExists(name)
 
 
+
+@pytest.mark.parametrize("cls_name", ["NearDupIndex", "SimHashIndex"])
+def test_persisted_index_resave_onto_own_path_raises(spark, sf_dir, tmp_path, cls_name):
+    """An index loaded from ``path`` cannot overwrite ``path``: its rows
+    read the files the overwrite would empty first. save() raises before
+    any drop or write, launches no Spark job, and the index stays
+    loadable with the same rows."""
+    cls = getattr(D, cls_name)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter("doc_id < 250")
+    path = str(tmp_path / "idx")
+    ids = _index_ids(cls.build(docs).save(path, buckets=4))
+    loaded = cls.load(spark, path)
+    sc = spark.sparkContext
+    sc.setJobGroup("resave", "re-save onto own path")
+    try:
+        with pytest.raises(ValueError, match="read from"):
+            loaded.save(path, buckets=4, mode="overwrite")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("resave")
+    assert _fresh_index_state(spark, cls, path) == (ids, 4)
+    cls.drop(spark, path)
+
 def test_cross_corpus_pairs_across_int_and_string_ids(spark):
     """A batch with int ids against a corpus with string ids: the planted
     duplicate pairs up, each side keeps its own id type, and a

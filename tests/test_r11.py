@@ -94,6 +94,19 @@ def test_log_rank_identical_groups_near_zero(spark):
     assert abs(r["chi2_micro"]) < 60_000  # identical curves: chi2 ~ 0
 
 
+def test_log_rank_without_events_counts_zero(spark):
+    """Every subject censored: O and E are sums over no event, 0 (not
+    NULL); chi2 and z are undefined (V = 0) and stay NULL."""
+    from pd_explain_spark.functions.events import log_rank_test
+
+    rows = [(1, 0, "b"), (1, 0, "b"), (1, 0, "b"), (1, 0, "a")]
+    df = spark.createDataFrame(rows, "t bigint, e int, g string")
+    r = log_rank_test(df, "t", "e", "g").collect()[0].asDict()
+    assert r == {
+        "n_a": 1, "n_b": 3, "o_a": 0, "e_a_micro": 0, "chi2_micro": None, "z_micro": None,
+    }
+
+
 # ---------------------------------------------------------------- CUPED
 
 
