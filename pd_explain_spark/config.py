@@ -4,8 +4,11 @@ The reference exposes a process-wide sampling switch (default ON, 5000
 rows, seed 42) consumed by every explainer; `toggle_sampling()` flips it.
 Our default is OFF — full-data fidelity is the Spark engine's value-add
 (BASELINE.md §3 budgets full-data explain at <= 30 s) — but the same
-switch exists for reference-parity latency, and explainers that take a
-``use_sampling`` kwarg default to this global when the kwarg is omitted.
+switch exists for reference-parity latency. Only the FEDEX explainers
+(filter, group-by, join and Shapley) read it: their ``use_sampling``
+kwarg defaults to this global when omitted. Many-to-one and MetaInsight
+default their own ``use_sampling`` to True and ignore the global. Sample
+sizes and the seed are per-explainer constants.
 """
 
 from __future__ import annotations
@@ -16,8 +19,6 @@ from dataclasses import dataclass
 @dataclass
 class _GlobalConfig:
     use_sampling: bool = False
-    sample_size: int = 5000
-    random_seed: int = 42
 
 
 GLOBALS = _GlobalConfig()

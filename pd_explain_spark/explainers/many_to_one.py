@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from ..operators.aggregates import is_numeric_type
 from ..operators.sampling import maybe_sample
 from .base import Explanation, ExplanationItem, ExplainerBase
-from .histograms import NULL_TOKEN, ColumnProfile, profile_columns
+from .histograms import NULL_TOKEN, ColumnProfile, _bin_structs, profile_columns
 
 RANDOM_SEED = 42  # reference many_to_one_explainer.py:16
 DEFAULT_SAMPLE = 5000  # ibid:15,326-333
@@ -345,15 +345,7 @@ class ManyToOneExplainer(ExplainerBase):
         """Info gain of each binned attribute about the label, all attributes
         in one exploded groupBy pass. Returns (ranked attrs, joint pandas
         histogram (attribute, bin, __label, cnt))."""
-        from .histograms import _bin_structs
-
-        structs = _bin_structs([(c, c, p) for c, p in profiles.items()], self.n_bins)
-        joint = (
-            labeled.select(F.explode(structs).alias("s"), "__label")
-            .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"), "__label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .toPandas()
-        )
+        joint = _joint_counts(labeled, F.col("__label"), profiles, self.n_bins).toPandas()
         total = joint[joint.attribute == joint.attribute.iloc[0]].cnt.sum() if len(joint) else 0
         if total == 0:
             return [], joint
@@ -690,6 +682,20 @@ class ManyToOneExplainer(ExplainerBase):
                 binned.unpersist()
 
 
+def _joint_counts(
+    labeled: DataFrame, label: Column, profiles: dict[str, ColumnProfile], n_bins: int
+) -> DataFrame:
+    """(attribute, bin, __label, cnt): every profiled attribute binned by
+    the histograms' ``_bin_structs`` and counted per label in ONE
+    exploded groupBy pass."""
+    structs = _bin_structs([(c, c, p) for c, p in profiles.items()], n_bins)
+    return (
+        labeled.select(F.explode(structs).alias("s"), label.alias("__label"))
+        .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"), "__label")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 def many_to_one_kernel_table(
     df: DataFrame, label_col: str, attributes: list[str]
 ) -> DataFrame:
@@ -698,28 +704,17 @@ def many_to_one_kernel_table(
     match count, coverage = matches_in_label / label_size, and
     separation_err = matches_outside_label / total_matches (the
     cluster_explorer contract, reference explainers/
-    many_to_one_explainer.py:543-634). ONE exploded groupBy over explicit
+    many_to_one_explainer.py:543-634). The explainer's own
+    ``_joint_counts`` pass (the one `_rank_attributes` runs) over explicit
     CATEGORICAL attributes (values are their own bins — no float binning,
     so every statistic is a single division of exact counts in any
-    engine), plus two tiny window sums. The same pass, extended with
-    binning and rule conjunction, is `_rank_attributes`/`_evaluate_rules`
-    inside the explainer."""
+    engine), plus two tiny window sums."""
     from pyspark.sql import Window
 
-    structs = [
-        F.struct(
-            F.lit(a).alias("attribute"),
-            F.coalesce(F.col(a).cast("string"), F.lit("(null)")).alias("bin"),
-        )
-        for a in attributes
-    ]
-    joint = (
-        df.select(
-            F.explode(F.array(*structs)).alias("s"),
-            F.col(label_col).cast("string").alias("label"),
-        )
-        .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"), "label")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    # explicit categorical profiles: values are their own bins
+    profiles = {a: ColumnProfile(name=a, is_numeric=False, distinct=0) for a in attributes}
+    joint = _joint_counts(df, F.col(label_col).cast("string"), profiles, 0).withColumnRenamed(
+        "__label", "label"
     )
     w_rule = Window.partitionBy("attribute", "bin")
     w_label = Window.partitionBy("attribute", "label")

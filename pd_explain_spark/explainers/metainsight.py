@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.operations import FilterOp, GroupByOp, JoinOp
+from ..operators.aggregates import agg_column
 from ..operators.sampling import maybe_sample
 from .base import Explanation, ExplanationItem, ExplainerBase
 from .histograms import NULL_TOKEN, _bin_expr_col, bin_label, profile_columns
@@ -401,18 +402,6 @@ class MetaInsightExplainer(ExplainerBase):
         return filter_dims, breakdowns, measures, profiles
 
     # -- mining ---------------------------------------------------------------
-    def _agg_expr(self, col: str, agg: str):
-        c = F.col(col).cast("double")
-        return {
-            "mean": F.avg(c),
-            "sum": F.sum(c),
-            "count": F.count(c),
-            "min": F.min(c),
-            "max": F.max(c),
-            "std": F.stddev_samp(c),
-            "median": F.median(c),
-        }.get(agg, F.avg(c))
-
     def generate_explanation(self) -> Explanation:
         op = getattr(self.frame, "operation", None)
         # group-by lineage: mine the pre-aggregation source (the result has
@@ -427,20 +416,9 @@ class MetaInsightExplainer(ExplainerBase):
             for bdim in breakdowns
             if fdim != bdim
         ]
-        aggs = [
-            self._agg_expr(col, agg).alias(f"__m{i}")
-            for i, (col, agg) in enumerate(measures)
-        ]
-        if not pairs or not aggs:
+        if not measures:
             pairs = []
 
-        # ONE grouping-sets pass for ALL (filter_dim, breakdown) pairs
-        # (SURVEY §4 custom-physical #4, extended across pairs): a single
-        # scan + shuffle computes every sibling scope of every pair; at
-        # 100 TB this is the difference between 1 and |pairs| table scans.
-        # Binned dim columns are never NULL (coalesced to NULL_TOKEN), so
-        # grouping_id unambiguously tags which unordered dim set a row
-        # aggregates over.
         grouped_by_set: dict[frozenset, "object"] = {}
         if pairs:
             def dim_expr(col: str):
@@ -449,24 +427,9 @@ class MetaInsightExplainer(ExplainerBase):
                     return _bin_expr_col(F.col(col), p, self.n_bins)
                 return F.coalesce(F.col(col).cast("string"), F.lit(NULL_TOKEN))
 
-            dims_needed = sorted({d for p in pairs for d in p})
-            proj = df.select(
-                *[dim_expr(d).alias(f"__d_{d}") for d in dims_needed],
-                *[F.col(c) for c in {col for col, _ in measures}],
-            )
-            uniq_sets = sorted({frozenset(p) for p in pairs}, key=lambda s: sorted(s))
-            gcols = [F.col(f"__d_{d}") for d in dims_needed]
-            gsets = [[F.col(f"__d_{d}") for d in dims_needed if d in s] for s in uniq_sets]
-            all_grouped = (
-                proj.groupingSets(gsets, *gcols)
-                .agg(*aggs, F.grouping_id().alias("__gid"))
-                .toPandas()
-            )
-            n = len(dims_needed)
-            for s in uniq_sets:
-                gid = sum(
-                    1 << (n - 1 - i) for i, d in enumerate(dims_needed) if d not in s
-                )
+            cube, gids = _scope_cube(df, pairs, measures, dim_expr)
+            all_grouped = cube.toPandas()
+            for s, gid in gids.items():
                 grouped_by_set[s] = all_grouped[all_grouped["__gid"] == gid]
 
         for fdim, bdim in pairs:
@@ -566,6 +529,34 @@ class MetaInsightExplainer(ExplainerBase):
         )
 
 
+def _scope_cube(df: DataFrame, pairs, measures, dim_expr):
+    """ONE grouping-sets pass for ALL (filter_dim, breakdown) pairs (SURVEY
+    §4 custom-physical #4, extended across pairs): a single scan +
+    shuffle computes every sibling scope of every pair; at 100 TB this is
+    the difference between 1 and |pairs| table scans. ``dim_expr(col)``
+    is the never-NULL bin key of a dimension, so grouping_id
+    unambiguously tags which unordered dim set a row aggregates over.
+    Every measure (column, agg) is computed by ``agg_column`` over the
+    column cast to double; an unknown agg raises. Returns (cube with
+    ``__d_<dim>`` keys, ``__m<i>`` values and ``__gid``, {dim set: gid})."""
+    dims_needed = sorted({d for p in pairs for d in p})
+    proj = df.select(
+        *[dim_expr(d).alias(f"__d_{d}") for d in dims_needed],
+        *[F.col(c).cast("double").alias(c) for c in sorted({c for c, _ in measures})],
+    )
+    uniq_sets = sorted({frozenset(p) for p in pairs}, key=lambda s: sorted(s))
+    gcols = [F.col(f"__d_{d}") for d in dims_needed]
+    gsets = [[F.col(f"__d_{d}") for d in dims_needed if d in s] for s in uniq_sets]
+    aggs = [agg_column(c, agg).alias(f"__m{i}") for i, (c, agg) in enumerate(measures)]
+    n = len(dims_needed)
+    gids = {
+        s: sum(1 << (n - 1 - i) for i, d in enumerate(dims_needed) if d not in s)
+        for s in uniq_sets
+    }
+    cube = proj.groupingSets(gsets, *gcols).agg(*aggs, F.grouping_id().alias("__gid"))
+    return cube, gids
+
+
 def metainsight_kernel_table(
     df: DataFrame,
     pairs: list[tuple[str, str]],
@@ -574,37 +565,17 @@ def metainsight_kernel_table(
 ) -> DataFrame:
     """SQL-checkable core of the E6 kernel: the shared grouping-sets scope
     cube every (filter_dim, breakdown) pair's sibling scopes are read from
-    — ONE scan + shuffle for ALL pairs (the custom-physical design,
-    generate_explanation:437-470). Categorical dims only (values are their
-    own bins, coalesced to the NULL token), so the cube is reproducible in
-    any engine as a union of plain GROUP BYs with the matching
-    grouping_id. Returns (dim columns..., gid, value)."""
+    — the explainer's own ``_scope_cube``. Categorical dims only (values
+    are their own bins, coalesced to the NULL token), so the cube is
+    reproducible in any engine as a union of plain GROUP BYs with the
+    matching grouping_id. Returns (dim columns..., gid, value)."""
+    def dim_expr(d: str):
+        return F.coalesce(F.col(d).cast("string"), F.lit(NULL_TOKEN))
+
+    cube, _ = _scope_cube(df, pairs, [(measure_col, agg)], dim_expr)
     dims_needed = sorted({d for p in pairs for d in p})
-    proj = df.select(
-        *[
-            F.coalesce(F.col(d).cast("string"), F.lit(NULL_TOKEN)).alias(f"__d_{d}")
-            for d in dims_needed
-        ],
-        F.col(measure_col),
-    )
-    uniq_sets = sorted({frozenset(p) for p in pairs}, key=lambda s: sorted(s))
-    gcols = [F.col(f"__d_{d}") for d in dims_needed]
-    gsets = [[F.col(f"__d_{d}") for d in dims_needed if d in s] for s in uniq_sets]
-    c = F.col(measure_col).cast("double")
-    agg_expr = {
-        "mean": F.avg(c), "sum": F.sum(c), "count": F.count(c),
-        "min": F.min(c), "max": F.max(c),
-    }[agg]
-    out = (
-        proj.groupingSets(gsets, *gcols)
-        .agg(F.round(agg_expr, 6).alias("value"), F.grouping_id().alias("gid"))
-    )
-    n = len(dims_needed)
-    wanted_gids = [
-        sum(1 << (n - 1 - i) for i, d in enumerate(dims_needed) if d not in s)
-        for s in uniq_sets
-    ]
-    out = out.filter(F.col("gid").isin(wanted_gids))
-    return out.select(
-        *[F.col(f"__d_{d}").alias(d) for d in dims_needed], "gid", "value"
+    return cube.select(
+        *[F.col(f"__d_{d}").alias(d) for d in dims_needed],
+        F.col("__gid").alias("gid"),
+        F.round("__m0", 6).alias("value"),
     )

@@ -15,21 +15,25 @@ Semantics from the reference's in-repo kernel duplicate
   (core/explainable_series.py:166,174), direction-signed.
 
 Spark design (SURVEY.md §4 custom-physical #2 — bin-removal algebra):
-ONE job computes per (group, attribute, bin) partial aggregates; the
-"exclude bin b" statistics are then O(1) driver-side combinations of
-the partials, so the source is scanned exactly once regardless of
-scale (the reference re-filters the frame 30 x attrs times).
+ONE job (``_partials``) computes per (group, attribute, bin) partial
+aggregates (cnt, nn, sm, ssq) — the source is scanned exactly once
+regardless of scale (the reference re-filters the frame 30 x attrs
+times). ONE search (``_influence_rows``) then runs over per-group
+sufficient statistics: excluding bin b subtracts that bin's statistics
+from the attribute's per-group totals, and ``_values`` turns what is left
+into group values. ``outlier_kernel_table`` runs the same job and search.
 
 Agg coverage (reference accepts whatever sits in agg_dict,
-explainers/outlier_explainer.py:47-58):
- * mean / sum / count / size — from (count, non-null count, sum).
-   Mean uses the NON-NULL count as denominator, matching
-   pandas/Spark semantics on data with missing measures.
- * std / var — one sumsq partial more: var = (ssq - sm^2/nn)/(nn-1).
- * median — approximate: the partials carry an extra equi-width
-   histogram dimension over the agg column (H bins), and the
-   post-exclusion median is read off the merged cumulative histogram.
-   Resolution = (max-min)/H of the agg column; deterministic.
+explainers/outlier_explainer.py:47-58), by sufficient statistics:
+ * mean / sum / count / size — (count, non-null count, sum). Mean uses
+   the NON-NULL count as denominator, matching pandas/Spark semantics on
+   data with missing measures; size reads no measure column.
+ * std / var — plus the sumsq: var = (ssq - sm^2/nn)/(nn-1).
+ * median — approximate: the job carries one more key, the measure's
+   own equi-width bin (H bins, ``bin_index``), so the statistics are
+   (count, measure histogram) and the post-exclusion median is the
+   midpoint of the histogram bin holding the middle row. Resolution =
+   (max-min)/H of the agg column; deterministic.
 
 Group keys may be composite (multi-key group-by): the group identity is
 the tuple of key values; ``target`` may be a scalar or tuple/list.
@@ -115,93 +119,89 @@ class OutlierExplainer(ExplainerBase):
         ]
         return attrs[: self.max_attrs]
 
-    def _exploded_base(self, src, ranges):
-        """Shared select list for the single partials pass: group key,
-        exploded (attr, bin) structs, the measure. Bin index is the
-        FEDEX histograms' ``bin_index``, so an external SQL engine
-        evaluating the same expression assigns identical bins."""
+    def _partials(self, src, attrs):
+        """The ONE partials job of the search: (group, attr, bin) ->
+        (cnt, nn, sm, ssq), where the median adds one more key, the
+        measure's own bin ``__abin``. Bins are the FEDEX histograms'
+        ``bin_index``, so an external SQL engine evaluating the same
+        expression assigns identical bins. Returns (ranges, partials
+        DataFrame); the partials are None when no attribute can be binned
+        or a median measure has no values. ``size`` reads no measure."""
+        median = self.agg_method == "median"
+        profiles = profile_columns(src, attrs + ([self.g_agg] if median else []))
+        ranges = _bin_ranges(profiles, attrs)
+        if median:
+            p = profiles.get(self.g_agg)
+            self._agg_range = None if p is None or p.vmin is None else (float(p.vmin), float(p.vmax))
+        if not ranges or (median and self._agg_range is None):
+            return ranges, None
         structs = []
         for a, (lo, hi) in ranges.items():
             idx = bin_index(F.col(a), lo, hi, self.n_bins)
             bin_key = F.when(F.col(a).isNull(), F.lit(-1)).otherwise(idx).cast("int")
             structs.append(F.struct(F.lit(a).alias("attr"), bin_key.alias("bin")))
-        v = F.col(self.g_agg).cast("double")
-        grp_expr = F.concat_ws(
-            _GRP_SEP, *[F.col(k).cast("string") for k in self.g_keys]
-        ).alias("__grp")
-        base_cols = [grp_expr, F.explode(F.array(*structs)).alias("s"), v.alias("__v")]
-        group_cols = ["__grp", F.col("s.attr").alias("attr"), F.col("s.bin").alias("bin")]
-        return v, base_cols, group_cols
-
-    def _attr_partials(self, src, ranges):
-        """ONE job: (group, attr, bin) -> (cnt, nn, sm, ssq) partials as a
-        small pandas frame (at most groups x attrs x (n_bins+1) rows)."""
-        _, base_cols, group_cols = self._exploded_base(src, ranges)
-        exploded = src.select(*base_cols)
-        return (
-            exploded.groupBy(*group_cols)
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.count("__v").alias("nn"),
-                F.sum("__v").alias("sm"),
-                F.sum(F.col("__v") * F.col("__v")).alias("ssq"),
-            )
-            .toPandas()
+        v = F.lit(None) if self.agg_method == "size" else F.col(self.g_agg)
+        grp = F.concat_ws(_GRP_SEP, *[F.col(k).cast("string") for k in self.g_keys])
+        cols = [grp.alias("__grp"), F.explode(F.array(*structs)).alias("s"), v.alias("__v")]
+        keys = ["__grp", F.col("s.attr").alias("attr"), F.col("s.bin").alias("bin")]
+        if median:
+            alo, ahi = self._agg_range
+            abin = bin_index(v, alo, ahi, MEDIAN_HIST_BINS) if ahi > alo else F.lit(0)
+            cols.append(F.when(v.isNull(), F.lit(-1)).otherwise(abin).cast("int").alias("__abin"))
+            keys.append("__abin")
+        # count/size read no moments: a string measure must not be cast
+        d = F.col("__v").cast("double") if self.agg_method not in ("count", "size") else F.lit(None)
+        partials = src.select(*cols).groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.count("__v").alias("nn"),
+            F.sum(d).alias("sm"),
+            F.sum(d * d).alias("ssq"),
         )
+        return ranges, partials
 
     def generate_explanation(self) -> Explanation:
         src = self.op.source
-        attrs = self._candidate_attrs(src)
-        if not attrs:
+        ranges, partials = self._partials(src, self._candidate_attrs(src))
+        partials = None if partials is None else partials.toPandas()
+        if partials is None or partials.empty:
             return Explanation(kind="outlier", query=self.op.query_string())
-
-        median = self.agg_method == "median"
-        profiles = profile_columns(src, attrs + ([self.g_agg] if median else []))
-        ranges = _bin_ranges(profiles, attrs)
-        if not ranges:
-            return Explanation(kind="outlier", query=self.op.query_string())
-
-        v, base_cols, group_cols = self._exploded_base(src, ranges)
-        if median:
-            agg_prof = profiles.get(self.g_agg)
-            if agg_prof is None or agg_prof.vmin is None or agg_prof.vmax is None:
-                return Explanation(kind="outlier", query=self.op.query_string())
-            alo, ahi = float(agg_prof.vmin), float(agg_prof.vmax)
-            awidth = (ahi - alo) / MEDIAN_HIST_BINS or 1.0
-            self._agg_hist = (alo, awidth)
-            abin = F.when(
-                v.isNull(), F.lit(-1)
-            ).otherwise(
-                F.least(
-                    F.lit(MEDIAN_HIST_BINS - 1),
-                    F.greatest(F.lit(0), F.floor((v - F.lit(alo)) / F.lit(awidth))),
-                )
-            ).cast("int")
-            exploded = src.select(*base_cols, abin.alias("__abin"))
-            partials = (
-                exploded.groupBy(*group_cols, "__abin")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .toPandas()
-            )
-        else:
-            partials = self._attr_partials(src, ranges)
-        if partials.empty:
-            return Explanation(kind="outlier", query=self.op.query_string())
-        partials[["cnt"]] = partials[["cnt"]].astype(float)
-
-        if self.agg_method == "median":
-            return self._search_median(partials, ranges)
-        return self._search(partials, ranges)
+        _, ctx = self._influence_rows(partials, ranges)
+        return self._finish(ctx, ranges)
 
     # ------------------------------------------------------------------
-    def _values_from_partials(self, cnt, nn, sm, ssq) -> np.ndarray:
-        """Group agg values from partial-sum arrays (vectorized, NaN where
-        undefined — pandas drops those groups from mean/std like we do)."""
-        cnt = np.asarray(cnt, dtype=float)
-        nn = np.asarray(nn, dtype=float)
-        sm = np.asarray(sm, dtype=float)
-        ssq = np.asarray(ssq, dtype=float)
+    def _stats(self, partials) -> np.ndarray:
+        """Per-row sufficient statistics, additive over rows: (cnt, nn,
+        sm, ssq) for the moment aggs, (cnt, measure histogram) for the
+        median (``__abin`` = -1 rows are null measures: counted, not
+        histogrammed)."""
+        cnt = partials["cnt"].to_numpy(float)
+        if self.agg_method != "median":
+            return np.column_stack(
+                [cnt] + [partials[m].fillna(0.0).to_numpy(float) for m in ("nn", "sm", "ssq")]
+            )
+        st = np.zeros((len(partials), 1 + MEDIAN_HIST_BINS))
+        st[:, 0] = cnt
+        abin = partials["__abin"].to_numpy(int)
+        has = abin >= 0
+        st[np.flatnonzero(has), 1 + abin[has]] = cnt[has]
+        return st
+
+    def _values(self, st: np.ndarray) -> np.ndarray:
+        """Group agg values from per-group sufficient statistics (one row
+        per group; NaN where undefined — pandas drops those groups from
+        mean/std like we do). The median is read off the measure
+        histogram: the midpoint of the bin holding the middle row."""
+        cnt = st[:, 0]
         with np.errstate(divide="ignore", invalid="ignore"):
+            if self.agg_method == "median":
+                hist = st[:, 1:]
+                n = hist.sum(axis=1)
+                below = np.cumsum(hist, axis=1) < ((n + 1) / 2.0)[:, None]
+                idx = np.minimum(below.sum(axis=1), MEDIAN_HIST_BINS - 1)
+                alo, ahi = self._agg_range
+                awidth = (ahi - alo) / MEDIAN_HIST_BINS  # 0 when every value is alo
+                return np.where(n > 0, alo + (idx + 0.5) * awidth, np.nan)
+            nn, sm, ssq = st[:, 1], st[:, 2], st[:, 3]
             if self.agg_method == "mean":
                 return np.where(nn > 0, sm / nn, np.nan)
             if self.agg_method == "sum":
@@ -225,20 +225,25 @@ class OutlierExplainer(ExplainerBase):
             return 0.0
         return self.dir * (target_val - vals.mean()) / std
 
-    def _finish(self, best, std_int_before, groups, base_vals, t_idx, ranges, after_vals):
-        if best is None:
+    def _finish(self, ctx, ranges) -> Explanation:
+        if ctx["best"] is None:
             return Explanation(kind="outlier", query=self.op.query_string())
-        infl, attr, b = best
+        infl, attr, b = ctx["best"]
         lo, hi = ranges[attr]
         width = (hi - lo) / self.n_bins
         b_lo, b_hi = lo + b * width, lo + (b + 1) * width
         label = f"[{b_lo:.4g}, {b_hi:.4g}{']' if b == self.n_bins - 1 else ')'}"
+        after = ctx["best_after"]
+
+        def finite(v):
+            return float(v) if math.isfinite(v) else 0.0
+
         items = [
             ExplanationItem(
                 attribute=attr,
                 bin=label,
                 influence=float(infl),
-                score=float(abs(std_int_before)),
+                score=float(abs(ctx["std_int_before"])),
                 side=None,
                 explanation=(
                     f"the outlier {'/'.join(self.g_keys)} = "
@@ -247,175 +252,88 @@ class OutlierExplainer(ExplainerBase):
                 ),
                 viz={
                     "kind": "dist-compare",
-                    "labels": [self._group_label(g) for g in groups],
-                    "src": [float(v) if math.isfinite(v) else 0.0 for v in base_vals],
-                    "res": [float(after_vals.get(g, math.nan)) if math.isfinite(after_vals.get(g, math.nan)) else 0.0 for g in groups],
-                    "highlight": int(t_idx),
+                    "labels": [self._group_label(g) for g in ctx["groups"]],
+                    "src": [finite(v) for v in ctx["base_vals"]],
+                    "res": [finite(after.get(g, math.nan)) for g in ctx["groups"]],
+                    "highlight": int(ctx["t_idx"]),
                 },
             )
         ]
         exp = Explanation(kind="outlier", query=self.op.query_string(), items=items,
                           scores={attr: float(infl)})
-        exp.extras["std_int_before"] = float(std_int_before)
+        exp.extras["std_int_before"] = float(ctx["std_int_before"])
         return exp
 
     def _influence_rows(self, partials, ranges):
-        """The bin-removal search itself: every candidate (attr, bin) with
-        its exclusion influence. Returns (rows, ctx) where rows is a list of
-        (attr, bin_idx, kept_cnt, influence) and ctx carries the base stats
-        plus the best bin's after-exclusion group values (for the viz).
+        """The bin-removal search, one loop for every agg: excluding bin b
+        of an attribute subtracts that bin's sufficient statistics from
+        the attribute's per-group totals, and ``_values`` turns what is
+        left into group values. Returns (rows, ctx) where rows is a list
+        of (attr, bin_idx, kept_cnt, influence) for every candidate and
+        ctx carries the base stats plus the best bin's after-exclusion
+        group values (for the viz).
 
-        This is the closed-form sum/count/sumsq algebra the oracle SQL for
-        ``outlier_kernel_table`` replays verbatim — keep the two in sync."""
+        For the moment aggs this is the closed-form sum/count/sumsq
+        algebra the oracle SQL for ``outlier_kernel_table`` replays
+        verbatim — keep the two in sync."""
         target_key = self._target_key()
-        any_attr = next(iter(ranges))
-        base = (
-            partials[partials["attr"] == any_attr]
-            .groupby("__grp")[["cnt", "nn", "sm", "ssq"]]
-            .sum()
-        )
-        if target_key not in base.index:
+        groups = sorted(set(partials["__grp"]))
+        if target_key not in groups:
             raise ValueError(
                 f"target group {self.target!r} not found in {self.g_keys!r} groups"
             )
-        groups = list(base.index)
-        base_vals = self._values_from_partials(base["cnt"], base["nn"], base["sm"], base["ssq"])
         t_idx = groups.index(target_key)
+        stats = self._stats(partials)
+        g_idx = partials["__grp"].map({g: i for i, g in enumerate(groups)}).to_numpy()
+
+        # per attribute: (groups x bins x stats) cube, bins ascending
+        cubes = {}
+        for attr, rows_idx in partials.groupby("attr").indices.items():
+            bins = partials["bin"].to_numpy(int)[rows_idx]
+            uniq = np.unique(bins)
+            cube = np.zeros((len(groups), len(uniq), stats.shape[1]))
+            np.add.at(cube, (g_idx[rows_idx], np.searchsorted(uniq, bins)), stats[rows_idx])
+            cubes[attr] = (uniq, cube)
+
+        base = cubes[next(iter(ranges))][1].sum(axis=1)
+        base_vals = self._values(base)
         std_int_before = self._std_int(base_vals, base_vals[t_idx])
-        n_total = float(base["cnt"].sum())
+        n_total = float(base[:, 0].sum())
 
         rows: list[tuple[str, int, float, float]] = []
         best = None  # (influence, attr, bin_idx)
         best_after: dict[str, float] = {}
-        for attr, grp in partials.groupby("attr"):
-            pivots = {
-                m: grp.pivot_table(index="__grp", columns="bin", values=m, aggfunc="sum").fillna(0.0)
-                for m in ("cnt", "nn", "sm", "ssq")
-            }
-            tots = {m: p.sum(axis=1) for m, p in pivots.items()}
-            for b in pivots["cnt"].columns:
+        for attr, (uniq, cube) in cubes.items():
+            tots = cube.sum(axis=1)
+            for j, b in enumerate(uniq):
                 if b < 0:  # null bin: reference's pd.cut drops nulls from bins
                     continue
-                ex = {m: tots[m] - pivots[m][b] for m in pivots}
-                kept = float(ex["cnt"].sum())
-                if kept <= 0:
+                ex = tots - cube[:, j]
+                kept = float(ex[:, 0].sum())
+                mask = ex[:, 0] > 0
+                if kept <= 0 or not mask[t_idx]:
                     continue
-                mask = ex["cnt"] > 0
-                g_list = list(ex["cnt"][mask].index)
-                if target_key not in g_list:
-                    continue
-                vals = self._values_from_partials(
-                    ex["cnt"][mask], ex["nn"][mask], ex["sm"][mask], ex["ssq"][mask]
-                )
-                t_val = vals[g_list.index(target_key)]
-                std_int_after = self._std_int(vals, t_val)
+                vals = self._values(ex[mask])
+                std_int_after = self._std_int(vals, vals[int(mask[:t_idx].sum())])
                 # positive influence = exclusion reduces the outlierness,
                 # scaled by kept/total (ref: inf / (n_total / n_kept))
                 infl = (std_int_before - std_int_after) * (kept / n_total)
                 rows.append((attr, int(b), kept, infl))
-                if (
-                    best is None
-                    or infl > best[0]
-                    or (infl == best[0] and (attr, int(b)) < (best[1], best[2]))
+                if best is None or infl > best[0] or (
+                    infl == best[0] and (attr, int(b)) < (best[1], best[2])
                 ):
                     best = (infl, attr, int(b))
-                    best_after = dict(zip(g_list, vals))
+                    best_after = dict(zip([g for g, m in zip(groups, mask) if m], vals))
 
         ctx = {
             "std_int_before": std_int_before,
             "groups": groups,
             "base_vals": base_vals,
             "t_idx": t_idx,
-            "n_total": n_total,
             "best": best,
             "best_after": best_after,
         }
         return rows, ctx
-
-    def _search(self, partials, ranges) -> Explanation:
-        _, ctx = self._influence_rows(partials, ranges)
-        return self._finish(
-            ctx["best"], ctx["std_int_before"], ctx["groups"], ctx["base_vals"],
-            ctx["t_idx"], ranges, ctx["best_after"],
-        )
-
-    # ------------------------------------------------------------------
-    def _median_from_hist(self, hist: np.ndarray) -> float:
-        """Approximate median from an equi-width histogram (bin midpoints)."""
-        n = hist.sum()
-        if n <= 0:
-            return math.nan
-        alo, awidth = self._agg_hist
-        cum = np.cumsum(hist)
-        idx = int(np.searchsorted(cum, (n + 1) / 2.0))
-        idx = min(idx, len(hist) - 1)
-        return alo + (idx + 0.5) * awidth
-
-    def _search_median(self, partials, ranges) -> Explanation:
-        target_key = self._target_key()
-        H = MEDIAN_HIST_BINS
-        any_attr = next(iter(ranges))
-
-        def hists_of(grp_frame):
-            """{group: (total_cnt, hist[H])} from (grp, abin, cnt) rows
-            (abin = -1 rows are null measures: counted, not histogrammed)."""
-            out_h: dict[str, np.ndarray] = {}
-            out_c: dict[str, float] = {}
-            for g, sub in grp_frame.groupby("__grp"):
-                h = np.zeros(H)
-                for abin, c in zip(sub["__abin"], sub["cnt"]):
-                    if abin >= 0:
-                        h[int(abin)] += c
-                out_h[g] = h
-                out_c[g] = float(sub["cnt"].sum())
-            return out_c, out_h
-
-        base_rows = partials[partials["attr"] == any_attr]
-        base_cnt, base_hist = hists_of(base_rows)
-        if target_key not in base_cnt:
-            raise ValueError(
-                f"target group {self.target!r} not found in {self.g_keys!r} groups"
-            )
-        groups = sorted(base_cnt)
-        base_vals = np.array([self._median_from_hist(base_hist[g]) for g in groups])
-        t_idx = groups.index(target_key)
-        std_int_before = self._std_int(base_vals, base_vals[t_idx])
-        n_total = float(sum(base_cnt.values()))
-
-        best = None
-        best_after: dict[str, float] = {}
-        for attr, grp in partials.groupby("attr"):
-            for b in sorted(set(grp["bin"])):
-                if b < 0:
-                    continue
-                sub = grp[grp["bin"] == b]
-                b_cnt, b_hist = hists_of(sub)
-                kept = n_total - float(sum(b_cnt.values()))
-                if kept <= 0:
-                    continue
-                after_vals, g_list = [], []
-                for g in groups:
-                    c_after = base_cnt[g] - b_cnt.get(g, 0.0)
-                    if c_after <= 0:
-                        continue
-                    h_after = base_hist[g] - b_hist.get(g, np.zeros(H))
-                    g_list.append(g)
-                    after_vals.append(self._median_from_hist(h_after))
-                if target_key not in g_list:
-                    continue
-                vals = np.array(after_vals)
-                t_val = vals[g_list.index(target_key)]
-                std_int_after = self._std_int(vals, t_val)
-                infl = (std_int_before - std_int_after) * (kept / n_total)
-                if (
-                    best is None
-                    or infl > best[0]
-                    or (infl == best[0] and (attr, int(b)) < (best[1], best[2]))
-                ):
-                    best = (infl, attr, int(b))
-                    best_after = dict(zip(g_list, vals))
-
-        return self._finish(best, std_int_before, groups, base_vals, t_idx, ranges, best_after)
 
 
 def _bin_ranges(profiles, attrs) -> dict[str, tuple[float, float]]:
@@ -442,9 +360,9 @@ def outlier_kernel_table(
     influence table the bin-removal search ranks, as a Spark DataFrame
     (attribute, bin, kept_cnt, influence).
 
-    The heavy work is the explainer's own single-pass partials job; the
-    closed-form exclusion algebra then runs over the tiny
-    (groups x attrs x bins) frame. Bins where the whole dataset or the
+    It runs the explainer's own single-pass partials job and search, so
+    it serves every agg the explainer serves; the exclusion algebra runs
+    over the tiny (groups x attrs x bins) frame. Bins where the whole dataset or the
     target group would disappear are omitted, matching `_influence_rows`.
 
     Determinism contract for oracle checks (mirror in the SQL): pass an
@@ -457,15 +375,11 @@ def outlier_kernel_table(
     explainer = OutlierExplainer(frame, target=target, dir=dir, n_bins=n_bins)
     src = explainer.op.source
     attrs = attributes or explainer._candidate_attrs(src)
-    ranges = _bin_ranges(profile_columns(src, attrs), attrs)
-    if not ranges:
-        raise ValueError(f"no binnable numeric attributes among {attrs!r}")
-    partials = explainer._attr_partials(src, ranges)
-    partials[["cnt"]] = partials[["cnt"]].astype(float)
-    rows, _ = explainer._influence_rows(partials, ranges)
-    spark = src.sparkSession
-    out = spark.createDataFrame(
+    ranges, partials = explainer._partials(src, attrs)
+    if partials is None:
+        raise ValueError(f"no binnable numeric attributes among {attrs!r} or no measure values")
+    rows, _ = explainer._influence_rows(partials.toPandas(), ranges)
+    return src.sparkSession.createDataFrame(
         [(a, b, int(kept), round(float(infl), 6)) for a, b, kept, infl in rows],
         schema="attribute string, bin int, kept_cnt bigint, influence double",
     )
-    return out

@@ -1405,6 +1405,27 @@ def keep_best(
     return df.join(losers, id_col, "anti")
 
 
+def _survivors(df: DataFrame, pairs: DataFrame, id_col: str, keep_by=None) -> DataFrame:
+    """The survivor tail of every end-to-end dedup: connected components
+    of ``pairs`` (id_a, id_b), then one row of ``df`` per duplicate group
+    — the ``keep_by``-maximal one (see :func:`keep_best`), or by default
+    the min-id one, via an anti-join on the other ids. Join strategy is
+    left to Catalyst/AQE — the loser set is usually broadcastable, but a
+    high-duplication corpus can make it arbitrarily large, so hinting
+    broadcast here would be wrong."""
+    comp = duplicate_components(pairs)
+    if keep_by is not None:
+        return keep_best(df, comp, keep_by, id_col)
+    # scale-audit note: this filter compares two COMPUTED columns of the
+    # component table (id vs propagated min-label) — structurally not
+    # pushable to any scan; an "unpushed filter" finding here is a
+    # false positive
+    losers = comp.filter(F.col("id") != F.col("component")).select(
+        F.col("id").alias(id_col)
+    )
+    return df.join(losers, id_col, "anti")
+
+
 def dedup_near(
     df: DataFrame,
     text_col: str = "text",
@@ -1420,21 +1441,12 @@ def dedup_near(
     components → keep one document per duplicate group (the min-id one
     by default; the ``keep_by``-maximal one when a score column/Column is
     given — see :func:`keep_best`).
-    Returns the surviving rows of ``df``: an anti-join against the
-    non-kept ids. Join strategy is left to Catalyst/AQE — the loser set
-    is usually broadcastable, but a high-duplication corpus can make it
-    arbitrarily large, so hinting broadcast here would be wrong."""
+    Returns the surviving rows of ``df`` (see :func:`_survivors`)."""
     pairs = minhash_near_duplicates(
         df, text_col, id_col, n=n, num_hashes=num_hashes, bands=bands,
         threshold=threshold, max_df=max_df,
     )
-    comp = duplicate_components(pairs)
-    if keep_by is not None:
-        return keep_best(df, comp, keep_by, id_col)
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "anti")
+    return _survivors(df, pairs, id_col, keep_by)
 
 
 # ---------------------------------------------------------------- fuzzy (edit distance)
@@ -1570,13 +1582,7 @@ def fuzzy_dedup(
     ``keep_by``-maximal one — see :func:`keep_best`). Returns the
     surviving rows of ``df`` via an anti-join on the non-kept ids."""
     pairs = edit_distance_pairs(df, text_col, id_col, max_dist, n, max_df)
-    comp = duplicate_components(pairs)
-    if keep_by is not None:
-        return keep_best(df, comp, keep_by, id_col)
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "anti")
+    return _survivors(df, pairs, id_col, keep_by)
 
 
 # ---------------------------------------------------------------- simhash
@@ -1933,13 +1939,7 @@ def winnow_dedup(
     long verbatim overlap (mirrors, boilerplate-wrapped reposts) and the
     corpus is too big for the full shingle self-join."""
     pairs = winnow_pairs(df, text_col, id_col, k, window, threshold)
-    comp = duplicate_components(pairs)
-    if keep_by is not None:
-        return keep_best(df, comp, keep_by, id_col)
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "anti")
+    return _survivors(df, pairs, id_col, keep_by)
 
 
 def soft_dedup_weights(

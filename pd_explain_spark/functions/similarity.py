@@ -1087,7 +1087,7 @@ def semantic_dedup(
     surviving rows of ``df`` via an anti-join on the non-kept ids,
     strategy left to Catalyst/AQE (the loser set can be arbitrarily
     large on a high-duplication corpus)."""
-    from .dedup import duplicate_components, keep_best
+    from .dedup import _survivors
 
     # settle HERE too (idempotent — pairs sees a LogicalRDD scan and
     # passes it through): the final survivor join below re-reads df, and
@@ -1095,17 +1095,7 @@ def semantic_dedup(
     # embedding subtree
     df = _settle_computed_input(df)
     pairs = semantic_dedup_pairs(df, id_col, vec_col, threshold, n_centroids, n_iter=n_iter)
-    comp = duplicate_components(pairs)
-    if keep_by is not None:
-        return keep_best(df, comp, keep_by, id_col)
-    # scale-audit note: this filter compares two COMPUTED columns of the
-    # component table (id vs propagated min-label) — structurally not
-    # pushable to any scan; an "unpushed filter" finding here is a
-    # false positive
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "anti")
+    return _survivors(df, pairs, id_col, keep_by)
 
 
 def prototype_scores(

@@ -427,7 +427,7 @@ def curation_pipeline(
     """
     from pyspark.sql import Window
 
-    from .dedup import duplicate_components, ngram_jaccard_pairs
+    from .dedup import _survivors, ngram_jaccard_pairs
 
     c = F.col(text_col)
     toks = tokens(normalized_text(c))
@@ -462,9 +462,7 @@ def curation_pipeline(
         exact_kept, text_col=text_col, id_col=id_col,
         n=ngram_n, threshold=jaccard_threshold,
     )
-    comp = duplicate_components(pairs)
-    losers = comp.filter(F.col("id") != F.col("component")).select(F.col("id").alias(id_col))
-    out = exact_kept.join(losers, id_col, "anti").select(id_col, "n_tokens", "quality")
+    out = _survivors(exact_kept, pairs, id_col).select(id_col, "n_tokens", "quality")
     from .dedup import _finalize_release
 
     return _finalize_release(out, [exact_kept])

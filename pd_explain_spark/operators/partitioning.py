@@ -24,14 +24,15 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     round-robin repartition is used (sortBeforeRepartition stays on, so
     retries are deterministic per SPARK-23207). Streaming frames (no
     ``.rdd``) and frames whose partition count cannot be read are
-    returned unchanged."""
+    returned unchanged. The width is read without running ``df``: see
+    ``_planned_width``."""
     if getattr(df, "isStreaming", False):
         # micro-batch parallelism is the source's concern
         # (maxFilesPerTrigger etc.), not a repartition
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        cur = df.rdd.getNumPartitions()
+        cur = _planned_width(df)
     except Exception:
         return df
     if cur >= target:
@@ -41,6 +42,34 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
 
         return df.repartition(target, *[F.col(k) for k in keys])
     return df.repartition(target)
+
+
+def _planned_width(df: DataFrame) -> int:
+    """Output partition count of ``df`` without running its plan; 0 when
+    only running it settles the count. An adaptive plan with exchanges
+    or subqueries coalesces partitions at run time, and building its
+    ``df.rdd`` would run its query stages (a join's shuffles and
+    broadcasts), which the caller's action re-plans and runs again: 0.
+    Any other plan — scans and narrow operators, also over a cached
+    relation whose blocks the action reuses — is asked through
+    ``df.rdd`` (the file split or cached partition count)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" and _has_stages(plan.executedPlan()):
+        return 0
+    return df.rdd.getNumPartitions()
+
+
+def _has_stages(plan) -> bool:
+    """Whether a physical plan holds an exchange or a subquery. Cached
+    relations are leaves here: their own plan is not a child."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if "Exchange" in node.nodeName() or node.subqueries().nonEmpty():
+            return True
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return False
 
 
 def salted_join(

@@ -150,17 +150,20 @@ def test_outlier_std_target_planted(spark):
     assert top.influence > 0
 
 
-def test_outlier_median_target_planted(spark):
-    """Group 'z' has an inflated MEDIAN because >half its rows (flag ~ 100)
-    sit at v ~ 60."""
+def _planted_median_frame(spark):
+    """Group 'z' has an inflated MEDIAN because >half its rows (flag ~
+    100) sit at v ~ 60."""
     rows = []
     rng = np.random.RandomState(11)
     for g in ["a", "b", "c", "d"]:
         rows += [(g, 10.0 + rng.rand(), float(rng.randint(0, 10))) for _ in range(200)]
     rows += [("z", 10.0 + rng.rand(), float(rng.randint(0, 10))) for _ in range(100)]
     rows += [("z", 60.0 + rng.rand(), 100.0) for _ in range(150)]
-    df = to_explainable(spark.createDataFrame(rows, ["g", "v", "flag"]), name="outl_med")
-    res = df.groupby("g")["v"].median()
+    return to_explainable(spark.createDataFrame(rows, ["g", "v", "flag"]), name="outl_med")
+
+
+def test_outlier_median_target_planted(spark):
+    res = _planted_median_frame(spark).groupby("g")["v"].median()
     exp = res.explain(explainer="outlier", target="z", dir="high")
     assert exp.items
     top = exp.items[0]
@@ -270,6 +273,62 @@ def test_outlier_kernel_table_matches_explain_choice(spark):
     assert exp.items
     # explain()'s winning influence equals the table's max (same algebra)
     assert abs(float(best["influence"]) - exp.items[0].influence) < 1e-5
+
+
+def test_outlier_kernel_table_median_differs_from_std(spark):
+    """On a median group-by the kernel table runs the median search: it is
+    not the std table, and its argmax is the bin explain() reports."""
+    from pd_explain_spark.explainers.outlier import outlier_kernel_table
+
+    df = _planted_median_frame(spark)
+    key = ["attribute", "bin"]
+    med_gb = df.groupby("g")["v"].median()
+    med = outlier_kernel_table(med_gb, target="z", attributes=["flag"]).toPandas()
+    std = outlier_kernel_table(
+        df.groupby("g")["v"].std(), target="z", attributes=["flag"]
+    ).toPandas()
+    med, std = med.sort_values(key).reset_index(drop=True), std.sort_values(key).reset_index(drop=True)
+    assert med[key].equals(std[key])
+    assert not np.allclose(med["influence"], std["influence"])
+    best = med.sort_values(["influence", "attribute", "bin"], ascending=[False, True, True]).iloc[0]
+    exp = med_gb.explain(explainer="outlier", target="z", dir="high")
+    assert exp.items and exp.items[0].attribute == best["attribute"]
+    assert abs(float(best["influence"]) - exp.items[0].influence) < 1e-5
+    assert "100" in exp.items[0].bin
+
+
+def test_outlier_median_of_constant_measure(spark):
+    """A measure with a single value has that value as every group's
+    median (the histogram has zero width, not a unit-width bin)."""
+    rows = [(g, 5.0, float(i % 10)) for g in "abz" for i in range(30)]
+    df = to_explainable(spark.createDataFrame(rows, ["g", "v", "flag"]), name="outl_const")
+    exp = df.groupby("g")["v"].median().explain(explainer="outlier", target="z")
+    assert exp.items
+    assert exp.items[0].viz["src"] == [5.0, 5.0, 5.0]
+
+
+def test_outlier_on_size_groupby(spark):
+    """A .size() group-by has no measure column: the partials count rows.
+    Group 'z' is large only because of its flag == 100 rows."""
+    from pyspark.sql import functions as F
+
+    rows = [(g, float(i % 10)) for g in "abcd" for i in range(100)]
+    rows += [("z", float(i % 10)) for i in range(100)] + [("z", 100.0)] * 80
+    df = to_explainable(spark.createDataFrame(rows, ["g", "flag"]), name="outl_size")
+    gb = df.groupby("g").size()
+    exp = gb.explain(explainer="outlier", target="z", dir="high")
+    assert exp.items
+    top = exp.items[0]
+    assert top.attribute == "flag"
+    assert "100" in top.bin
+    assert top.influence > 0
+    # the viz carries the group sizes themselves
+    assert exp.items[0].viz["src"] == [100.0, 100.0, 100.0, 100.0, 180.0]
+    # count of a string measure counts its non-null values
+    named = df.df.withColumn("name", F.when(F.col("flag") != 3.0, F.lit("n")))
+    cnt = to_explainable(named, name="outl_cnt").groupby("g")["name"].count()
+    exp = cnt.explain(explainer="outlier", target="z", dir="high")
+    assert exp.items[0].viz["src"] == [90.0, 90.0, 90.0, 90.0, 170.0]
 
 
 def test_profile_merge_keeps_few_valued_numeric_rules(spark):
@@ -483,6 +542,35 @@ def test_metainsight_kernel_table_cube(spark):
     assert abs(float(ab["value"].iloc[0]) - round(expect, 6)) < 1e-6
 
 
+def test_metainsight_measures_use_agg_column(spark):
+    """Every MetaInsight measure is computed by agg_column: a nunique
+    measure counts distinct values (not their mean), on the explainer's
+    scope cube and on the kernel table, and an unknown agg raises."""
+    from pd_explain_spark.explainers.metainsight import (
+        MetaInsightExplainer,
+        metainsight_kernel_table,
+    )
+
+    rows = [("r%d" % (i % 2), "s%d" % (i % 3), float(i % 5)) for i in range(60)]
+    df = spark.createDataFrame(rows, ["a", "b", "v"])
+    t = metainsight_kernel_table(df, [("a", "b")], "v", agg="nunique").toPandas()
+    pdf = df.toPandas()
+    want = pdf.groupby(["a", "b"])["v"].nunique()
+    got = t.set_index(["a", "b"])["value"].sort_index()
+    assert got.tolist() == want.sort_index().astype(float).tolist()
+
+    edf = to_explainable(df, name="mi_agg")
+    gb = edf.groupby(["a", "b"]).agg({"v": "nunique"})
+    exp = gb.explain(explainer="metainsight", filter_dimensions=["a"],
+                     breakdown_dimensions=["b"], use_sampling=False)
+    for m in exp.extras["insights"]:
+        assert m.agg == "nunique"
+    bad = MetaInsightExplainer(edf, filter_dimensions=["a"], breakdown_dimensions=["b"],
+                               measures=[("v", "bogus")], use_sampling=False)
+    with pytest.raises(ValueError, match="unsupported aggregate"):
+        bad.generate_explanation()
+
+
 def test_series_explain_and_to_html_passthrough(spark):
     """Reference ExpSeries.explain/to_html delegate to the frame path
     (core/explainable_series.py:289-427)."""
@@ -614,6 +702,30 @@ def _job_count(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_fan_out_reads_join_width_without_jobs(spark):
+    """fan_out decides from the physical plan: on a join result it runs
+    no job before the caller's action, and still fans the adaptive join
+    result out to the cluster width."""
+    from pd_explain_spark.operators.partitioning import fan_out
+
+    left = spark.createDataFrame([(i % 7, float(i)) for i in range(50)], "k bigint, lv double")
+    right = spark.createDataFrame([(i, float(i)) for i in range(5)], "k bigint, rv double")
+    res = left.join(right, "k", "left").select("lv")
+    out = []
+    assert _job_count(spark, lambda: out.append(fan_out(res))) == 0
+    plan = out[0]._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan
+    # a filled cache of full width is read as is: no job, no repartition
+    wide = left.repartition(spark.sparkContext.defaultParallelism).cache()
+    try:
+        wide.count()
+        sel = wide.select("lv")
+        assert _job_count(spark, lambda: out.append(fan_out(sel))) == 0
+        assert out[-1] is sel
+    finally:
+        wide.unpersist()
+
+
 def test_dual_histogram_job_counts(spark):
     """Jobs each dual-histogram flavor launches on a small fixture. The
     weighted flavor's two side branches feed one groupBy, so one
@@ -646,12 +758,14 @@ def test_dual_histogram_job_counts(spark):
     lr, rr = {"lv": "l_lv", "lc": "l_lc"}, {"rv": "r_rv"}
     cases = {
         "predicate": (lambda: dual_histogram_predicate(left, F.col("lv") > 5, lp), 2),
-        "union": (lambda: dual_histogram_union(left, res, lp, result_rename=lr), 9),
+        # the result branch's fan_out reads the join's width from its plan,
+        # so the join stages run once, in the histogram action
+        "union": (lambda: dual_histogram_union(left, res, lp, result_rename=lr), 6),
         "shapley_union": (
             lambda: shapley_dual_histograms(
                 left, right, res, lp, rp, left_rename=lr, right_rename=rr
             ),
-            9,
+            6,
         ),
         "weighted": (
             lambda: shapley_dual_histograms_weighted(left, right, ["k"], "left", lp, rp), 8

@@ -193,27 +193,25 @@ def test_filter_kernel_single_scan_partial_agg(spark, sf_dir, lineitem):
 
 
 def test_outlier_kernel_single_scan(spark, sf_dir, orders):
-    """The bin-removal influence table reads the source exactly once: the
-    partials cube is a single explode+groupBy job."""
-    from pd_explain_spark.explainers.histograms import profile_columns
-    from pd_explain_spark.explainers.outlier import OutlierExplainer, _bin_ranges
+    """The bin-removal partials read the source exactly once: the plan the
+    explainer's ``_partials`` runs is a single explode+groupBy job, for
+    the moment flavor and for the median flavor (one more key, the
+    measure's own bin)."""
+    from pd_explain_spark import to_explainable
+    from pd_explain_spark.explainers.outlier import OutlierExplainer
 
     o = orders.df.select(
         "o_orderpriority", "o_custkey", "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    from pd_explain_spark import to_explainable
-
     e = to_explainable(o, name="orders_cents")
-    g = e.groupby("o_orderpriority")["cents"].mean()
-    exp = OutlierExplainer(g, target="1-URGENT")
-    attrs = ["o_custkey", "o_orderkey"]
-    ranges = _bin_ranges(profile_columns(o, attrs), attrs)
-    _, base_cols, group_cols = exp._exploded_base(o, ranges)
-    partials_df = o.select(*base_cols).groupBy(*group_cols).agg(F.count(F.lit(1)).alias("cnt"))
-    final = _final(_plan(partials_df))
-    assert final.count("Scan parquet") == 1
-    assert final.count("Exchange") <= 1  # one shuffle for the tiny cube
+    for agg in ("mean", "median"):
+        g = getattr(e.groupby("o_orderpriority")["cents"], agg)()
+        _, partials = OutlierExplainer(g, target="1-URGENT")._partials(o, ["o_custkey", "o_orderkey"])
+        final = _final(_plan(partials))
+        assert final.count("Scan parquet") == 1, agg
+        assert final.count("Exchange") <= 1, agg  # one shuffle for the tiny cube
+        assert ("__abin" in final) == (agg == "median")
 
 
 def test_metainsight_kernel_one_shuffle_for_all_pairs(spark, sf_dir, lineitem):
