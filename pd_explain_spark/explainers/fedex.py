@@ -158,9 +158,10 @@ class FedexExplainer(ExplainerBase):
             out = out.transform(checkpoint_df)
         return out
 
-    def _explain_filter(self) -> Explanation:
+    def _explain_filter(self, source: DataFrame | None = None) -> Explanation:
+        """``source``: the already-sampled source, when the caller holds it."""
         op: FilterOp = self.op
-        source = self._maybe_sample(op.source)
+        source = self._maybe_sample(op.source) if source is None else source
         filter_cols = set(op.predicate.columns()) if op.predicate else {op.attribute}
         candidates = self._candidate_columns(source, exclude=filter_cols)
         with _persisted_projections() as project:
@@ -337,7 +338,7 @@ class FedexExplainer(ExplainerBase):
                 attr = numerics[0]
         agg = (self.value or "mean").lower()
         shapley = _shapley_filter(source, op.predicate.to_spark(source), attr, agg)
-        base = self._explain_filter()
+        base = self._explain_filter(source)
         exp = Explanation(
             kind="fedex-shapley-filter",
             query=op.query_string(),

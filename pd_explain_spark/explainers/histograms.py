@@ -299,6 +299,11 @@ def shapley_dual_histograms_weighted(
       inner          -> m          (unmatched rows vanish)
       side retained  -> max(m, 1)  (unmatched rows survive once)
       side dropped   -> m          (left side of a right join, etc.)
+      left semi      -> m > 0      (a matched left row appears once)
+      left anti      -> m == 0     (only unmatched left rows appear)
+
+    A semi or anti result holds no right column, so those joins have no
+    right branch; any other ``how`` raises ``ValueError``.
 
     This halves the exploded row volume and removes the join shuffle
     entirely when AQE broadcasts the (key, m) count tables — the
@@ -313,26 +318,30 @@ def shapley_dual_histograms_weighted(
 
     on = list(on)
     h = (how or "inner").lower().replace("_", "")
-    if h in ("outer", "full", "fullouter"):
-        h = "full"
-    elif h == "leftouter":
-        h = "left"
-    elif h == "rightouter":
-        h = "right"
+    h = {
+        "cross": "inner", "outer": "full", "fullouter": "full", "leftouter": "left",
+        "rightouter": "right", "leftsemi": "semi", "leftanti": "anti",
+    }.get(h, h)
+    if h not in ("inner", "left", "right", "full", "semi", "anti"):
+        raise ValueError(f"shapley_dual_histograms_weighted: unknown join how={how!r}")
     l_retained = h in ("left", "full")
     r_retained = h in ("right", "full")
 
     lk = left.groupBy(*on).agg(F.count(F.lit(1)).cast("bigint").alias("__m"))
     rk = right.groupBy(*on).agg(F.count(F.lit(1)).cast("bigint").alias("__m"))
     m = F.coalesce(F.col("__m"), F.lit(0)).cast("bigint")
+    if h in ("semi", "anti"):
+        l_w = ((m > 0) if h == "semi" else (m == 0)).cast("bigint")
+        right_profiles = {}
+    else:
+        l_w = F.greatest(m, F.lit(1)) if l_retained else m
     branches = []
-    for df, profiles, other_keys, prefix, retained in (
-        (left, left_profiles, rk, "left:", l_retained),
-        (right, right_profiles, lk, "right:", r_retained),
+    for df, profiles, other_keys, prefix, w in (
+        (left, left_profiles, rk, "left:", l_w),
+        (right, right_profiles, lk, "right:", F.greatest(m, F.lit(1)) if r_retained else m),
     ):
         pairs = _pairs(df, profiles, prefix=prefix)
         if pairs:
-            w = F.greatest(m, F.lit(1)) if retained else m
             # the unmatched-row census rides the same aggregate: summed
             # over one attribute's bins it is the side's unmatched row
             # count, which prices the null extension below with ZERO

@@ -1,6 +1,18 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
-Training-data pipeline extensions (no reference counterpart). Scale notes:
+Training-data pipeline extensions (no reference counterpart).
+
+Every near-dup flavor finds candidates with ONE pair search,
+``_shared_key_pairs``: two (id, key...) tables joined on every key, then
+kept as distinct pairs, a per-pair count or a per-doc budget
+(``_candidates``). Within one corpus it runs one table against itself
+(adding ``a.id < b.id``; pairs (id_a, id_b)); across corpora it joins a
+new batch's table to the corpus's (pairs (new_id, corpus_id)). So each
+within-corpus flavor is its cross-corpus body on one index twice:
+``_index_pairs`` (n-gram and winnowed Jaccard), ``_edit_distance_pairs``,
+``_simhash_pairs``, and both MinHash LSH joins.
+
+Scale notes:
 
  * exact_duplicates: hash-groupBy — one shuffle on a 32-char key; at
    100 TB combine-side partial aggregation makes this shuffle tiny.
@@ -23,7 +35,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+import operator
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -217,6 +231,57 @@ def _two_side_shingle_index(
     return side(F.col("__new"), new_t), side(~F.col("__new"), corp_t)
 
 
+# ---------------------------------------------------------------- pair search
+# a pair's column names: one corpus searched against itself, or a new
+# batch searched against a corpus
+_WITHIN = ("id_a", "id_b")
+_AGAINST = ("new_id", "corpus_id")
+
+
+def _shared_key_pairs(
+    a: DataFrame, b: DataFrame, keys: tuple, names: tuple, *extra
+) -> DataFrame:
+    """The one candidate join of the near-dup family: the rows of two
+    (id, key...) tables that match on every key, as (names[0],
+    names[1], *extra), where ``extra`` are Columns over the ``a.``/``b.``
+    aliases. One frame searched against itself (``a is b``) also keeps
+    ``a.id < b.id``: each unordered pair once, never a doc with itself."""
+    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if a is b:
+        cond.append(F.col("a.id") < F.col("b.id"))
+    return a.alias("a").join(b.alias("b"), reduce(operator.and_, cond)).select(
+        F.col("a.id").alias(names[0]), F.col("b.id").alias(names[1]), *extra
+    )
+
+
+def _candidates(
+    pairs: DataFrame, names: tuple, max_pairs_per_doc: int | None = None
+) -> DataFrame:
+    """The tail of a shared-key join: its distinct rows, or with a budget
+    each left doc's top ``max_pairs_per_doc`` partners by the number of
+    keys the pair shares (:func:`_budget_pairs`)."""
+    if max_pairs_per_doc is None:
+        return pairs.distinct()
+    scored = pairs.groupBy(*names).agg(F.count(F.lit(1)).alias("__n_shared"))
+    return _budget_pairs(scored, max_pairs_per_doc, *names)
+
+
+def _budget_pairs(
+    scored: DataFrame, max_pairs_per_doc: int, a: str = "id_a", b: str = "id_b"
+) -> DataFrame:
+    """Top-``max_pairs_per_doc`` partners per left id from an
+    (a, b, __n_shared) table, strongest evidence first (band
+    collisions / shared shingles), deterministic ties by partner id.
+    row_number-then-filter compiles to WindowGroupLimit: each shuffle
+    partition keeps a bounded heap per id, never a full per-id sort."""
+    w = Window.partitionBy(a).orderBy(F.desc("__n_shared"), F.asc(b))
+    return (
+        scored.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= max_pairs_per_doc)
+        .select(a, b)
+    )
+
+
 # ---------------------------------------------------------------- exact jaccard
 def ngram_jaccard_pairs(
     df: DataFrame,
@@ -247,23 +312,7 @@ def ngram_jaccard_pairs(
     # without a persist the tokenize+explode+distinct subtree (and
     # whatever upstream pipeline produced `df`) evaluates three times
     inv = _shingle_index(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    cached: list[DataFrame] = [inv]
-    if max_df is None:
-        a, b = inv.alias("a"), inv.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        return _finalize_release(_jaccard_from_inter(inter, inv, inv, threshold), cached)
-    disc = _df_pruned(inv, max_df)
-    a, b = disc.alias("a"), disc.alias("b")
-    cands = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    return _finalize_release(_verify_pairs(cands, inv, inv, threshold, cached), cached)
+    return _index_pairs(inv, inv, threshold, max_df, [inv])
 
 
 def _hot_shingles(inv: DataFrame, max_df: float, n_docs: int | None = None) -> DataFrame:
@@ -307,6 +356,23 @@ def _df_pruned(inv: DataFrame, max_df: float, n_docs: int | None = None) -> Data
     return inv.join(F.broadcast(hot), "shingle", "left_anti")
 
 
+def _discovery_sides(
+    a_inv: DataFrame, b_inv: DataFrame, max_df: float | None, b_n_docs: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The candidate-discovery views of a pair search's two (id, shingle)
+    indexes: each side without the shingles hot in that side (one index
+    searched against itself is pruned once), or both whole when
+    ``max_df`` is None."""
+    if max_df is None:
+        return a_inv, b_inv
+    disc_a = _df_pruned(a_inv, max_df)
+    if b_inv is a_inv:
+        return disc_a, disc_a
+    # b_n_docs (from the index's tiny sizes table) keeps the hot-shingle
+    # cap from re-scanning the big corpus index per batch
+    return disc_a, _df_pruned(b_inv, max_df, b_n_docs)
+
+
 def _flagged_anti_join(
     new_df: DataFrame, flagged_ids: DataFrame, id_col: str
 ) -> DataFrame:
@@ -318,23 +384,6 @@ def _flagged_anti_join(
         flagged_ids.columns[0], id_col
     )
     return new_df.join(F.broadcast(flagged), id_col, "left_anti")
-
-
-def _levenshtein_verify(
-    cands: DataFrame, ta: DataFrame, tb: DataFrame,
-    a_id: str, b_id: str, max_dist: int,
-) -> DataFrame:
-    """Shared fuzzy verify: join normalized texts onto the candidate
-    pairs, cut by the |len| lower bound, then the banded levenshtein
-    kernel. ``ta``/``tb`` are (id, __nt) frames keyed by ``a_id``/``b_id``."""
-    return (
-        cands.join(ta.select(F.col(a_id), F.col("__nt").alias("__ta")), a_id)
-        .join(tb.select(F.col(b_id), F.col("__nt").alias("__tb")), b_id)
-        .filter(F.abs(F.length("__ta") - F.length("__tb")) <= max_dist)
-        .withColumn("__d", F.levenshtein("__ta", "__tb", max_dist))
-        .filter(F.col("__d") >= 0)  # banded kernel returns -1 past the cap
-        .select(a_id, b_id, F.col("__d").cast("bigint").alias("edit_distance"))
-    )
 
 
 def _set_sizes(inv: DataFrame) -> DataFrame:
@@ -421,28 +470,40 @@ def _verify_pairs(
     return _jaccard_ratio(inter, sa, sb, a, b, threshold)
 
 
-def _jaccard_from_inter(
-    inter: DataFrame,
-    a_inv: DataFrame,
-    b_inv: DataFrame,
-    threshold: float,
-    a: str = "id_a",
-    b: str = "id_b",
-    b_sizes: DataFrame | None = None,
+def _index_pairs(
+    a_inv: DataFrame, b_inv: DataFrame, threshold: float, max_df: float | None,
+    cached: list, names: tuple = _WITHIN, key: str = "shingle",
+    b_sizes: DataFrame | None = None, b_n_docs: int | None = None,
 ) -> DataFrame:
-    """(a, b, inter) + the two sides' inverted indexes -> thresholded
-    Jaccard. Set sizes come from the exploded indexes (one groupBy per
-    side, or the precomputed ``b_sizes``), so no array columns ever
-    cross a join boundary."""
-    sb = _set_sizes(b_inv) if b_sizes is None else b_sizes
-    return _jaccard_ratio(
-        inter,
-        _named_sizes(_set_sizes(a_inv), a, "n_a"),
-        _named_sizes(sb, b, "n_b"),
-        a,
-        b,
-        threshold,
-    )
+    """Exact Jaccard over two (id, ``key``) indexes — the one body of
+    the n-gram and winnowed flavors: one index passed twice searches a
+    corpus within itself, two indexes join a batch to a corpus.
+
+    With ``max_df`` None every pair sharing a key is scored, |A ∩ B|
+    counted straight off the join and the set sizes taken from the
+    exploded indexes, so no array column crosses a join boundary. With
+    ``max_df`` set, candidates must share a key outside each side's hot
+    set (:func:`_discovery_sides`) and :func:`_verify_pairs` recounts
+    |A ∩ B| over the unpruned indexes, so values stay exact. ``b_sizes``
+    is a precomputed (id, n_sh) table of the b side (a persisted index's
+    sizes) and ``b_n_docs`` its doc count. Pruning reads the ``shingle``
+    column; the winnowed flavor (``key="fp"``) never prunes."""
+    if max_df is None:
+        inter = (
+            _shared_key_pairs(a_inv, b_inv, (key,), names)
+            .groupBy(*names)
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+        sb = _set_sizes(b_inv) if b_sizes is None else b_sizes
+        out = _jaccard_ratio(
+            inter, _named_sizes(_set_sizes(a_inv), names[0], "n_a"),
+            _named_sizes(sb, names[1], "n_b"), *names, threshold,
+        )
+    else:
+        disc_a, disc_b = _discovery_sides(a_inv, b_inv, max_df, b_n_docs)
+        cands = _candidates(_shared_key_pairs(disc_a, disc_b, (key,), names), names)
+        out = _verify_pairs(cands, a_inv, b_inv, threshold, cached, *names, b_sizes)
+    return _finalize_release(out, cached)
 
 
 def near_dup_pairs_against(
@@ -472,53 +533,7 @@ def near_dup_pairs_against(
     new_inv, corp_inv = _two_side_shingle_index(
         new_df, corpus_df, text_col, id_col, n, cached
     )
-    return _cross_corpus_pairs(new_inv, corp_inv, threshold, max_df, cached)
-
-
-def _cross_corpus_pairs(
-    new_inv: DataFrame,
-    corp_inv: DataFrame,
-    threshold: float,
-    max_df: float | None,
-    cached: list,
-    corp_sizes: DataFrame | None = None,
-    corp_n_docs: int | None = None,
-) -> DataFrame:
-    """Shared cross-corpus Jaccard math over two (id, shingle) indexes —
-    the body of :func:`near_dup_pairs_against`, also reused by
-    :class:`NearDupIndex` where the corpus index is a persisted bucketed
-    table (and ``corp_sizes`` its precomputed per-doc set sizes)."""
-    if max_df is None:
-        inter = (
-            new_inv.alias("a")
-            .join(corp_inv.alias("b"), F.col("a.shingle") == F.col("b.shingle"))
-            .groupBy(
-                F.col("a.id").alias("new_id"), F.col("b.id").alias("corpus_id")
-            )
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        out = _jaccard_from_inter(
-            inter, new_inv, corp_inv, threshold, "new_id", "corpus_id", corp_sizes
-        )
-    else:
-        # candidate discovery on the df-pruned indexes (bounds the join
-        # fan-out), exact verification on the full ones
-        disc_a = _df_pruned(new_inv, max_df)
-        # corp_n_docs (from the index's tiny sizes table) keeps the
-        # hot-shingle cap from re-scanning the big corpus index per batch
-        disc_b = _df_pruned(corp_inv, max_df, corp_n_docs)
-        cands = (
-            disc_a.alias("a")
-            .join(disc_b.alias("b"), F.col("a.shingle") == F.col("b.shingle"))
-            .select(
-                F.col("a.id").alias("new_id"), F.col("b.id").alias("corpus_id")
-            )
-            .distinct()
-        )
-        out = _verify_pairs(
-            cands, new_inv, corp_inv, threshold, cached, "new_id", "corpus_id", corp_sizes
-        )
-    return _finalize_release(out, cached)
+    return _index_pairs(new_inv, corp_inv, threshold, max_df, cached, _AGAINST)
 
 
 def dedup_near_against(
@@ -549,11 +564,6 @@ def _hadoop_path(spark, p: str):
     return jp.getFileSystem(sc._jsc.hadoopConfiguration()), jp
 
 
-def _path_exists(spark, p: str) -> bool:
-    fs, jp = _hadoop_path(spark, p)
-    return bool(fs.exists(jp))
-
-
 def _write_meta(spark, path: str, meta: dict) -> None:
     """Write an index's ``path/meta.json`` from the driver, no Spark job."""
     fs, jp = _hadoop_path(spark, f"{path}/meta.json")
@@ -575,6 +585,40 @@ def _read_meta(spark, path: str) -> dict:
     finally:
         stream.close()
     return json.loads(bytes(raw).decode("utf-8"))
+
+
+def _save_writes(owner: str, path: str, mode: str, markers: tuple, rows: tuple) -> bool:
+    """The save-mode rules of every persisted index, checked before any
+    write; True when the caller should write. ``errorifexists`` (also
+    ``error``/``default``) raises when one of ``markers`` is under
+    ``path``, where ``ignore`` writes nothing; ``overwrite`` raises when
+    one of the ``rows`` frames reads from ``path``; ``append`` is
+    rejected (``append_save`` grows an index)."""
+    spark = rows[0].sparkSession
+    mode = mode.lower()
+    if mode in ("error", "default"):
+        mode = "errorifexists"
+    if mode not in ("errorifexists", "ignore", "overwrite"):
+        raise ValueError(
+            f"{owner}.save: mode {mode!r} is not supported; use "
+            "'errorifexists', 'ignore' or 'overwrite', and append_save(path, "
+            "new_df) to grow a saved index"
+        )
+    fs, jp = _hadoop_path(spark, path)
+    if mode != "overwrite" and any(fs.exists(jp.suffix(f"/{p}")) for p in markers):
+        if mode == "ignore":
+            return False
+        raise FileExistsError(f"{owner}.save: {path!r} holds an index")
+    from urllib.parse import urlparse
+
+    root = fs.makeQualified(jp).toUri().getPath().rstrip("/") + "/"
+    # the scan's file listing is local metadata: no Spark job
+    if any((urlparse(f).path or f).startswith(root) for df in rows for f in df.inputFiles()):
+        raise ValueError(
+            f"{owner}.save: the index's rows are read from {path!r}, "
+            "which an overwrite empties before it reads them; save to another path"
+        )
+    return True
 
 
 class _PersistedIndex:
@@ -675,48 +719,18 @@ class _PersistedIndex:
         and return the reloaded table-backed index, so later joins use
         the bucket layout.
 
-        ``mode``: ``errorifexists`` (``error``) raises before any write
-        when an index is already at ``path``; ``ignore`` then writes
-        nothing and returns the saved index; ``overwrite`` replaces its
-        table, sidecars and meta, and raises ``ValueError`` before any
-        drop or write when the index's own rows are read from ``path``
-        (an index loaded from it). ``append`` is rejected: grow a saved
-        index with :meth:`append_save`, which keeps its bucket spec and
-        skips already-indexed ids."""
-        spark = getattr(self, self._DATA).sparkSession
-        mode = mode.lower()
-        if mode in ("error", "default"):
-            mode = "errorifexists"
-        if mode not in ("errorifexists", "ignore", "overwrite"):
-            raise ValueError(
-                f"{type(self).__name__}.save: mode {mode!r} is not supported; use "
-                "'errorifexists', 'ignore' or 'overwrite', and append_save(path, "
-                "new_df) to grow a saved index"
-            )
-        if mode != "overwrite" and any(
-            _path_exists(spark, f"{path}/{p}") for p in ("meta.json", self._DATA)
-        ):
-            if mode == "ignore":
-                return self.load(spark, path)
-            raise FileExistsError(f"{type(self).__name__}.save: {path!r} holds an index")
-        from urllib.parse import urlparse
-
-        fs, jp = _hadoop_path(spark, path)
-        root = fs.makeQualified(jp).toUri().getPath().rstrip("/") + "/"
-        # the scan's file listing is local metadata: no Spark job
-        if any(
-            (urlparse(f).path or f).startswith(root)
-            for f in getattr(self, self._DATA).inputFiles()
-        ):
-            raise ValueError(
-                f"{type(self).__name__}.save: the index's rows are read from {path!r}, "
-                "which an overwrite empties before it reads them; save to another path"
-            )
+        ``mode`` follows :func:`_save_writes`; ``ignore`` over a saved
+        index returns it, ``overwrite`` replaces table, sidecars and meta."""
+        rows = getattr(self, self._DATA)
+        spark = rows.sparkSession
+        markers = ("meta.json", self._DATA)
+        if not _save_writes(type(self).__name__, path, mode, markers, (rows,)):
+            return self.load(spark, path)
         # drop first: saveAsTable(overwrite) on an existing external table
         # keeps the OLD bucket spec, and an entry whose files are gone
         # would fail the write
         self.drop(spark, path)
-        self._write(getattr(self, self._DATA), path, buckets, "overwrite")
+        self._write(rows, path, buckets, "overwrite")
         self._save_sidecars(spark, path)
         _write_meta(spark, path, {**self._meta(), "buckets": int(buckets)})
         return self.load(spark, path)
@@ -790,7 +804,7 @@ class NearDupIndex(_PersistedIndex):
     touches the big table again.
 
     Same exact-Jaccard semantics as :func:`near_dup_pairs_against`
-    (shared math: ``_cross_corpus_pairs``), including the ``max_df``
+    (shared math: ``_index_pairs``), including the ``max_df``
     candidate-discovery guard — whose hot-shingle doc-frequency
     aggregate also rides the bucket layout (groupBy on the bucket
     column needs no exchange).
@@ -874,9 +888,9 @@ class NearDupIndex(_PersistedIndex):
         # table — re-reading it is a columnar scan, and caching it would
         # discard the bucket distribution AQE uses to elide the exchange
         corp_n_docs = self.sizes.count() if max_df is not None else None
-        return _cross_corpus_pairs(
-            new_inv, self.inv, threshold, max_df, [new_inv],
-            corp_sizes=self.sizes, corp_n_docs=corp_n_docs,
+        return _index_pairs(
+            new_inv, self.inv, threshold, max_df, [new_inv], _AGAINST,
+            b_sizes=self.sizes, b_n_docs=corp_n_docs,
         )
 
     def dedup(
@@ -889,12 +903,8 @@ class NearDupIndex(_PersistedIndex):
     ) -> DataFrame:
         """New-batch rows with no near-duplicate in the indexed corpus
         (the :func:`dedup_near_against` shape over the index)."""
-        flagged = (
-            self.pairs_against(new_df, text_col, id_col, threshold, max_df)
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        return new_df.join(F.broadcast(flagged), id_col, "left_anti")
+        pairs = self.pairs_against(new_df, text_col, id_col, threshold, max_df)
+        return _flagged_anti_join(new_df, pairs.select("new_id"), id_col)
 
 
 # ---------------------------------------------------------------- minhash + lsh
@@ -1010,35 +1020,8 @@ def minhash_lsh_candidates(
     banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     if _cache_registry is not None:
         _cache_registry.append(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    if max_pairs_per_doc is None:
-        return joined.distinct()
-    return _budget_pairs(
-        joined.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("__n_shared")),
-        max_pairs_per_doc,
-    )
-
-
-def _budget_pairs(scored: DataFrame, max_pairs_per_doc: int) -> DataFrame:
-    """Top-``max_pairs_per_doc`` partners per left id from a
-    (id_a, id_b, __n_shared) table, strongest evidence first (band
-    collisions / shared shingles), deterministic ties by partner id.
-    row_number-then-filter compiles to WindowGroupLimit: each shuffle
-    partition keeps a bounded heap per id, never a full per-id sort."""
-    w = Window.partitionBy("id_a").orderBy(
-        F.desc("__n_shared"), F.asc("id_b")
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= max_pairs_per_doc)
-        .select("id_a", "id_b")
-    )
+    pairs = _shared_key_pairs(banded, banded, ("band", "bucket"), _WITHIN)
+    return _candidates(pairs, _WITHIN, max_pairs_per_doc)
 
 
 def minhash_near_duplicates(
@@ -1138,27 +1121,9 @@ def minhash_pairs_against(
         _signatures_from_index(sig_corp, num_hashes, hash_fn=hash_fn),
         bands, rows_per_band, hash_fn,
     )
-    joined = ba.alias("a").join(
-        bb.alias("b"),
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket")),
-    ).select(F.col("a.id").alias("new_id"), F.col("b.id").alias("corpus_id"))
-    if max_pairs_per_doc is None:
-        cands = joined.distinct()
-    else:
-        scored = joined.groupBy("new_id", "corpus_id").agg(
-            F.count(F.lit(1)).alias("__n_shared")
-        )
-        cands = (
-            _budget_pairs(
-                scored.withColumnRenamed("new_id", "id_a")
-                .withColumnRenamed("corpus_id", "id_b"),
-                max_pairs_per_doc,
-            )
-            .withColumnRenamed("id_a", "new_id")
-            .withColumnRenamed("id_b", "corpus_id")
-        )
-    out = _verify_pairs(cands, new_inv, corp_inv, threshold, cached, "new_id", "corpus_id")
+    pairs = _shared_key_pairs(ba, bb, ("band", "bucket"), _AGAINST)
+    cands = _candidates(pairs, _AGAINST, max_pairs_per_doc)
+    out = _verify_pairs(cands, new_inv, corp_inv, threshold, cached, *_AGAINST)
     return _finalize_release(out, cached)
 
 
@@ -1491,25 +1456,37 @@ def edit_distance_pairs(
     from pyspark.storagelevel import StorageLevel
 
     inv = _shingle_index(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    disc = _df_pruned(inv, max_df) if max_df is not None else inv
-    a, b = disc.alias("a"), disc.alias("b")
-    joined = a.join(
-        b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id"))
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    if max_pairs_per_doc is None:
-        cands = joined.distinct()
-    else:
-        cands = _budget_pairs(
-            joined.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("__n_shared")),
-            max_pairs_per_doc,
-        )
-    t = df.select(
-        F.col(id_col).alias("id"), normalized_text(F.col(text_col)).alias("__nt")
+    return _edit_distance_pairs(
+        df, df, inv, inv, text_col, id_col, max_dist, max_df, [inv], _WITHIN,
+        max_pairs_per_doc,
     )
-    ta = t.select(F.col("id").alias("id_a"), "__nt")
-    tb = t.select(F.col("id").alias("id_b"), "__nt")
-    out = _levenshtein_verify(cands, ta, tb, "id_a", "id_b", max_dist)
-    return _finalize_release(out, [inv])
+
+
+def _edit_distance_pairs(
+    a_df: DataFrame, b_df: DataFrame, a_inv: DataFrame, b_inv: DataFrame,
+    text_col: str, id_col: str, max_dist: int, max_df: float | None,
+    cached: list, names: tuple, max_pairs_per_doc: int | None = None,
+) -> DataFrame:
+    """The one body of both edit-distance flavors: candidates share a
+    shingle of the two indexes (one index passed twice within a corpus),
+    then the normalized texts join onto the candidate pairs, the |len|
+    lower bound cuts, and the banded levenshtein kernel verifies."""
+    disc_a, disc_b = _discovery_sides(a_inv, b_inv, max_df)
+    pairs = _shared_key_pairs(disc_a, disc_b, ("shingle",), names)
+    cands = _candidates(pairs, names, max_pairs_per_doc)
+
+    def texts(df: DataFrame, name: str, nt: str) -> DataFrame:
+        return df.select(F.col(id_col).alias(name), normalized_text(F.col(text_col)).alias(nt))
+
+    out = (
+        cands.join(texts(a_df, names[0], "__ta"), names[0])
+        .join(texts(b_df, names[1], "__tb"), names[1])
+        .filter(F.abs(F.length("__ta") - F.length("__tb")) <= max_dist)
+        .withColumn("__d", F.levenshtein("__ta", "__tb", max_dist))
+        .filter(F.col("__d") >= 0)  # banded kernel returns -1 past the cap
+        .select(*names, F.col("__d").cast("bigint").alias("edit_distance"))
+    )
+    return _finalize_release(out, cached)
 
 
 def edit_distance_pairs_against(
@@ -1533,22 +1510,10 @@ def edit_distance_pairs_against(
     new_inv, corp_inv = _two_side_shingle_index(
         new_df, corpus_df, text_col, id_col, n, cached
     )
-    disc_a = _df_pruned(new_inv, max_df) if max_df is not None else new_inv
-    disc_b = _df_pruned(corp_inv, max_df) if max_df is not None else corp_inv
-    cands = (
-        disc_a.alias("a")
-        .join(disc_b.alias("b"), F.col("a.shingle") == F.col("b.shingle"))
-        .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("corpus_id"))
-        .distinct()
+    return _edit_distance_pairs(
+        new_df, corpus_df, new_inv, corp_inv, text_col, id_col, max_dist, max_df,
+        cached, _AGAINST,
     )
-    tn = new_df.select(
-        F.col(id_col).alias("new_id"), normalized_text(F.col(text_col)).alias("__nt")
-    )
-    tc = corpus_df.select(
-        F.col(id_col).alias("corpus_id"), normalized_text(F.col(text_col)).alias("__nt")
-    )
-    out = _levenshtein_verify(cands, tn, tc, "new_id", "corpus_id", max_dist)
-    return _finalize_release(out, cached)
 
 
 def fuzzy_dedup_against(
@@ -1655,25 +1620,20 @@ def simhash_near_duplicates(
 ) -> DataFrame:
     """Hamming-close pairs via 4-block LSH (a pair within distance <= 3
     must agree on at least one of 4 blocks), verified exactly."""
-    sigs = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn)
-    blocks = _simhash_blocks(sigs, hash_fn)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return pairs
+    blocks = _simhash_blocks(simhash_signatures(df, text_col, id_col, hash_fn=hash_fn), hash_fn)
+    return _simhash_pairs(blocks, blocks, max_hamming, _WITHIN)
+
+
+def _simhash_pairs(
+    a_blocks: DataFrame, b_blocks: DataFrame, max_hamming: int, names: tuple
+) -> DataFrame:
+    """The probe of every SimHash flavor: block-key join, exact
+    bit_count verify, distinct. One blocks table passed twice searches a
+    corpus within itself; a live or persisted corpus table as ``b``
+    joins a batch to it, so the paths cannot drift."""
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming")
+    pairs = _shared_key_pairs(a_blocks, b_blocks, ("block", "key"), names, hamming)
+    return _candidates(pairs, names).filter(F.col("hamming") <= max_hamming)
 
 
 def simhash_pairs_against(
@@ -1704,31 +1664,8 @@ def simhash_pairs_against(
     enter the join."""
     sn = simhash_signatures(new_df, text_col, id_col, hash_fn=hash_fn)
     sc = simhash_signatures(corpus_df, text_col, id_col, hash_fn=hash_fn)
-    return _simhash_cross_pairs(
-        _simhash_blocks(sn, hash_fn), _simhash_blocks(sc, hash_fn), max_hamming
-    )
-
-
-def _simhash_cross_pairs(
-    new_blocks: DataFrame, corpus_blocks: DataFrame, max_hamming: int
-) -> DataFrame:
-    """Shared probe tail of the cross-corpus SimHash flavors: block-key
-    join, exact bit_count verify, distinct — one definition so the
-    live-corpus and persisted-index paths cannot drift."""
-    a, b = new_blocks.alias("a"), corpus_blocks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.key") == F.col("b.key")),
-        )
-        .select(
-            F.col("a.id").alias("new_id"),
-            F.col("b.id").alias("corpus_id"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    return _simhash_pairs(
+        _simhash_blocks(sn, hash_fn), _simhash_blocks(sc, hash_fn), max_hamming, _AGAINST
     )
 
 
@@ -1808,10 +1745,8 @@ class SimHashIndex(_PersistedIndex):
         """(new_id, corpus_id, hamming) against the persisted corpus —
         :func:`simhash_pairs_against` semantics, the index changes the
         physical layout, never the math."""
-        sigs = simhash_signatures(new_df, text_col, id_col, hash_fn=self.hash_fn)
-        return _simhash_cross_pairs(
-            _simhash_blocks(sigs, self.hash_fn), self.blocks, max_hamming
-        )
+        batch = self._batch(new_df, text_col, id_col, self._meta())
+        return _simhash_pairs(batch, self.blocks, max_hamming, _AGAINST)
 
     def dedup(
         self,
@@ -1914,13 +1849,7 @@ def winnow_pairs(
     inv = winnow_fingerprint_index(df, text_col, id_col, k, window).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    a, b = inv.alias("a"), inv.alias("b")
-    inter = (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return _finalize_release(_jaccard_from_inter(inter, inv, inv, threshold), [inv])
+    return _index_pairs(inv, inv, threshold, None, [inv], key="fp")
 
 
 def winnow_dedup(

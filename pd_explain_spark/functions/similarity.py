@@ -791,9 +791,20 @@ class IvfIndex:
         """Persist hive-partitioned by bucket: a loaded index's probe
         scan prunes to the probed buckets' directories (PartitionFilters
         at the parquet source — the property that makes a billion-vector
-        index servable)."""
-        self.assigned.write.mode(mode).partitionBy("bucket").parquet(f"{path}/assigned")
-        self.centroids.write.mode(mode).parquet(f"{path}/centroids")
+        index servable). ``mode`` follows the persisted dedup indexes'
+        rules (``dedup._save_writes``): ``error`` raises when an index is
+        at ``path``, ``ignore`` then writes nothing, ``overwrite``
+        refuses an index whose rows are read from ``path``, and
+        ``append`` is rejected (grow a saved index with
+        :meth:`append_save`)."""
+        from .dedup import _save_writes
+
+        markers = ("assigned", "centroids")
+        if _save_writes("IvfIndex", path, mode, markers, (self.assigned, self.centroids)):
+            self.assigned.write.mode("overwrite").partitionBy("bucket").parquet(
+                f"{path}/assigned"
+            )
+            self.centroids.write.mode("overwrite").parquet(f"{path}/centroids")
 
     @classmethod
     def load(cls, spark, path: str) -> "IvfIndex":

@@ -7,7 +7,10 @@ Writes ``plans/$PLANS_ROUND/<entry>_<suffix>.txt`` (default round ``r13``)
 for each entry (suffix is ``before`` or ``after``). The plan is the
 optimizer's initial formatted plan (what ``df.explain('formatted')``
 prints) captured over ``$SPARK_GRAFT_SF_DIR`` (default sf0.1), so
-plan-shape claims can be checked without running Spark.
+plan-shape claims can be checked without running Spark. Expression and
+exchange ids are masked (``doc_id#123L`` is written ``doc_id#L``,
+``plan_id=42`` as ``plan_id=``), so a ``diff`` of a before and an after
+capture shows only real plan changes.
 
 ``--no-checkpoint``: for entries whose result frame is
 checkpoint-terminated (``_finalize_release`` / ``checkpoint_df``) the
@@ -24,6 +27,7 @@ import importlib
 import io
 import os
 import pkgutil
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -76,9 +80,10 @@ def main():
         with redirect_stdout(buf):
             df.explain("formatted")
         path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
+        text = re.sub(r"(#|plan_id=)\d+", r"\1", buf.getvalue())
         with open(path, "w") as f:
-            f.write(buf.getvalue())
-        print(f"wrote {path} ({len(buf.getvalue())} bytes)")
+            f.write(text)
+        print(f"wrote {path} ({len(text)} bytes)")
 
 
 if __name__ == "__main__":

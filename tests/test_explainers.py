@@ -5,6 +5,8 @@ Stronger than the reference's smoke-only policy (tests/test_explainers.py:4-6
 the kernel is exactly computable, and smoke-check structure elsewhere.
 """
 
+import itertools
+
 import numpy as np
 import pytest
 
@@ -652,7 +654,10 @@ def test_shapley_weighted_histograms_match_union_flavor(spark):
     weighted by join-key multiplicity, null extension in the opposite
     side's NULL bin) must reproduce the rebuilt-join union flavor
     bit-for-bit on every join type, including NULL keys, NULL values,
-    and multi-match keys."""
+    and multi-match keys. A semi join keeps each matched left row once
+    and an anti join only the unmatched ones; neither result holds a
+    right column, so the weighted flavor has no right attributes. Any
+    other unknown ``how`` raises."""
     from pd_explain_spark.explainers.histograms import (
         profile_columns,
         shapley_dual_histograms,
@@ -671,7 +676,7 @@ def test_shapley_weighted_histograms_match_union_flavor(spark):
     )
     lp = profile_columns(left, ["lv", "lc"])
     rp = profile_columns(right, ["rv"])
-    for how in ("inner", "left", "right", "full"):
+    for how in ("inner", "left", "right", "full", "left_semi", "semi", "left_anti", "anti"):
         res = left.selectExpr("k", "lv AS __L_lv", "lc AS __L_lc").join(
             right.selectExpr("k", "rv AS __R_rv"), on=["k"], how=how
         )
@@ -683,17 +688,26 @@ def test_shapley_weighted_histograms_match_union_flavor(spark):
         new = shapley_dual_histograms_weighted(
             left, right, ["k"], how, lp, rp, 20
         )
+        if how.endswith(("semi", "anti")):
+            assert not new["attribute"].str.startswith("right:").any(), how
+            old = old[old["attribute"].str.startswith("left:")]
         key = ["attribute", "bin"]
         o = old.groupby(key)[["src_cnt", "res_cnt"]].sum().sort_index()
         n = new.groupby(key)[["src_cnt", "res_cnt"]].sum().sort_index()
         assert o.equals(n.astype(o.dtypes.to_dict())), f"how={how} diverged"
+    with pytest.raises(ValueError, match="how"):
+        shapley_dual_histograms_weighted(left, right, ["k"], "sideways", lp, rp, 20)
 
+
+_JOB_GROUPS = itertools.count()
 
 
 def _job_count(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` launches."""
+    """Number of Spark jobs ``fn()`` launches. Each call gets a fresh job
+    group: a name from ``id(fn)`` is reused once ``fn`` is freed, and the
+    tracker would then count the earlier call's jobs too."""
     sc = spark.sparkContext
-    group = f"jobs-{id(fn)}"
+    group = f"jobs-{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, group)
     try:
         fn()
@@ -778,6 +792,20 @@ def test_dual_histogram_job_counts(spark):
     }
     got = {name: _job_count(spark, fn) for name, (fn, _) in cases.items()}
     assert got == {name: want for name, (_, want) in cases.items()}
+
+
+def test_shapley_filter_samples_the_source_once(spark, lineitem):
+    """With sampling on, the Shapley filter explainer hands its sample to
+    the FEDEX filter body instead of sampling and checkpointing the
+    source again: it takes the FEDEX filter's jobs plus one, the
+    conditional aggregate of the Shapley values."""
+    out = lineitem[lineitem["l_quantity"] > 45]
+    fedex = _job_count(spark, lambda: out.explain(use_sampling=True))
+    shapley = _job_count(
+        spark, lambda: out.explain(explainer="shapley", use_sampling=True)
+    )
+    assert shapley == fedex + 1
+
 
 def test_shapley_weighted_histograms_one_side_without_candidates(spark):
     """When a side has no candidate columns, the opposite side's null

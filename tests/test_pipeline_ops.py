@@ -571,6 +571,43 @@ def test_bpe_token_count_known_strings(spark):
     assert out == {1: 2, 2: 4, 3: 4}
 
 
+@pytest.mark.parametrize("mode", ["append", "ignore", "errorifexists", "overwrite"])
+def test_ivf_index_save_modes(spark, embeddings, tmp_path, mode):
+    """IvfIndex.save keeps the persisted dedup indexes' mode rules over a
+    path that holds an index: append is rejected (append_save grows an
+    index), ignore writes nothing, errorifexists raises before any
+    write, and overwrite replaces the index, except from an index whose
+    rows are read from that path (the write would empty them first)."""
+    first = embeddings.filter("vec_id < 60")
+    second = embeddings.filter("vec_id >= 60 AND vec_id < 120")
+    path = str(tmp_path / "ivf")
+    S.ivf_build_fixed(first, n_centroids=4).save(path)
+
+    def saved():
+        idx = S.IvfIndex.load(spark, path)
+        ids = sorted(r[0] for r in idx.assigned.select("neighbor_id").collect())
+        return ids, idx.centroids.count()
+
+    before = saved()
+    assert before == (sorted(r[0] for r in first.select("vec_id").collect()), 4)
+    other = S.ivf_build_fixed(second, n_centroids=4)
+    if mode == "append":
+        with pytest.raises(ValueError, match="append_save"):
+            other.save(path, mode="append")
+    elif mode == "ignore":
+        other.save(path, mode="ignore")
+    elif mode == "errorifexists":
+        with pytest.raises(FileExistsError):
+            other.save(path)
+    else:
+        with pytest.raises(ValueError, match="read from"):
+            S.IvfIndex.load(spark, path).save(path, mode="overwrite")
+        assert saved() == before
+        other.save(path, mode="overwrite")
+        before = (sorted(r[0] for r in second.select("vec_id").collect()), 4)
+    assert saved() == before
+
+
 def test_ivf_index_save_load_partition_pruning(spark, embeddings, tmp_path):
     """A persisted IVF index is hive-partitioned by bucket; a query's
     probe scan must (a) return the same results as the in-memory index
@@ -2608,6 +2645,42 @@ def test_persisted_index_resave_onto_own_path_raises(spark, sf_dir, tmp_path, cl
     assert not sc.statusTracker().getJobIdsForGroup("resave")
     assert _fresh_index_state(spark, cls, path) == (ids, 4)
     cls.drop(spark, path)
+
+_WITHIN_AND_AGAINST = {
+    "ngram": (
+        lambda d: D.ngram_jaccard_pairs(d, threshold=0.2),
+        lambda d: D.near_dup_pairs_against(d, d, threshold=0.2),
+    ),
+    "ngram_max_df": (
+        lambda d: D.ngram_jaccard_pairs(d, threshold=0.2, max_df=0.05),
+        lambda d: D.near_dup_pairs_against(d, d, threshold=0.2, max_df=0.05),
+    ),
+    "minhash": (
+        lambda d: D.minhash_near_duplicates(d, threshold=0.3),
+        lambda d: D.minhash_pairs_against(d, d, threshold=0.3),
+    ),
+    "simhash": (
+        lambda d: D.simhash_near_duplicates(d, max_hamming=10, hash_fn="md5"),
+        lambda d: D.simhash_pairs_against(d, d, max_hamming=10, hash_fn="md5"),
+    ),
+    "edit_distance": (
+        lambda d: D.edit_distance_pairs(d, max_dist=40),
+        lambda d: D.edit_distance_pairs_against(d, d, max_dist=40),
+    ),
+}
+
+
+@pytest.mark.parametrize("flavor", sorted(_WITHIN_AND_AGAINST))
+def test_within_corpus_pairs_equal_corpus_against_itself(spark, sf_dir, flavor):
+    """Each within-corpus flavor is its cross-corpus body on one index
+    searched against itself: its pairs equal the corpus's cross-corpus
+    pairs against itself, kept where new_id < corpus_id."""
+    within, against = _WITHIN_AND_AGAINST[flavor]
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    got = sorted(tuple(r) for r in within(docs).collect())
+    want = sorted(tuple(r) for r in against(docs).filter("new_id < corpus_id").collect())
+    assert got and got == want
+
 
 def test_cross_corpus_pairs_across_int_and_string_ids(spark):
     """A batch with int ids against a corpus with string ids: the planted
