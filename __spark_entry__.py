@@ -10667,7 +10667,7 @@ def trimmed_lineitem_q(spark, sf_dir):
 
 @_q(
     "readability_docs",
-    """WITH base AS (
+    r"""WITH base AS (
          SELECT doc_id,
                 list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
                             w -> w <> '') AS ws,

@@ -27,18 +27,19 @@ collect.
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
 from dataclasses import replace
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..session import checkpoint_df
 
 from ..core.operations import FilterOp, GroupByOp, JoinOp
 from ..operators.aggregates import is_numeric_type
+from ..operators.partitioning import fan_out
 from ..operators.sampling import maybe_sample
 from .base import Explanation, ExplanationItem, ExplainerBase
 from .histograms import (
@@ -49,7 +50,6 @@ from .histograms import (
     dual_histogram_union,
     profile_columns,
     shapley_dual_histograms,
-    shapley_dual_histograms_weighted,
 )
 
 DEFAULT_TOP_K = 1
@@ -57,32 +57,6 @@ DEFAULT_CORR_TH = 0.7
 DEFAULT_N_BINS = 20
 SAMPLE_SIZE = 5000
 RANDOM_SEED = 42
-
-
-@contextmanager
-def _persisted_projections():
-    """Yields ``project(df, columns)``: ``fan_out(df.select(*columns))``
-    LAZILY persisted MEMORY_AND_DISK — its first consumer (the profile
-    aggregate) fills the cache inside its own job, and later jobs read
-    cached, partitioned blocks. Every projection is unpersisted when the
-    block exits, also when a job inside it throws (blocks would
-    otherwise linger until the ContextCleaner gets to them)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..operators.partitioning import fan_out
-
-    held: list[DataFrame] = []
-
-    def project(df: DataFrame, columns: list[str]) -> DataFrame:
-        out = fan_out(df.select(*columns)).persist(StorageLevel.MEMORY_AND_DISK)
-        held.append(out)
-        return out
-
-    try:
-        yield project
-    finally:
-        for df in held:
-            df.unpersist()
 
 
 class FedexExplainer(ExplainerBase):
@@ -164,21 +138,25 @@ class FedexExplainer(ExplainerBase):
         source = self._maybe_sample(op.source) if source is None else source
         filter_cols = set(op.predicate.columns()) if op.predicate else {op.attribute}
         candidates = self._candidate_columns(source, exclude=filter_cols)
-        with _persisted_projections() as project:
-            if not self.use_sampling and candidates:
-                # full-data mode consumes the source twice (profile+corr
-                # agg, then the dual histogram) and both partial aggregates
-                # run inside the SCAN stage — on a low-split input (single
-                # row-group file) that is two serial single-task passes.
-                # The fanned, persisted projection fills the cache in the
-                # profile agg's own (now parallel) job and the histogram
-                # reads cached blocks (guide §2.2/§5). Sampling mode already
-                # checkpoints its <= 5k-row sample in _maybe_sample.
-                source = project(source, [
-                    c for c in source.columns
-                    if c in set(candidates) | filter_cols
-                    or (op.attribute is not None and c == op.attribute)
-                ])
+        projection = None
+        if not self.use_sampling and candidates:
+            # full-data mode consumes the source twice (profile+corr agg,
+            # then the dual histogram) and both partial aggregates run
+            # inside the SCAN stage — on a low-split input (single
+            # row-group file) that is two serial single-task passes. The
+            # fanned projection is persisted LAZILY: the profile agg fills
+            # the cache in its own (now parallel) job and the histogram
+            # reads cached blocks (guide §2.2/§5). Sampling mode already
+            # checkpoints its <= 5k-row sample in _maybe_sample. A size
+            # trade-off, measured with the projection against without on
+            # 4 cores: ~10% faster on sf0.1 lineitem, one row group (0.94
+            # vs 1.03-1.05 s), ~12% slower on a 60k-row table (0.40 vs
+            # 0.35 s).
+            keep = set(candidates) | filter_cols | {op.attribute}
+            source = projection = fan_out(
+                source.select(*[c for c in source.columns if c in keep])
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
             profiles = profile_columns(source, candidates, corr_anchor=op.attribute)
             # columns correlated with the filter attribute are pruned
             corr = {
@@ -192,6 +170,9 @@ class FedexExplainer(ExplainerBase):
             hist = dual_histogram_predicate(
                 source, op.predicate.to_spark(source), profiles, self.n_bins
             )
+        finally:
+            if projection is not None:
+                projection.unpersist()
         items, scores = self._score_histogram(hist, profiles, side=None)
         exp = Explanation(
             kind="fedex-filter", query=op.query_string(), items=items[: self.top_k], scores=scores
@@ -202,21 +183,24 @@ class FedexExplainer(ExplainerBase):
     # ------------------------------------------------------------------
     # E1 join / E3 shapley
     # ------------------------------------------------------------------
-    def _join_side(self, consider: str):
+    def _side(self, consider: str):
+        """One join side ready for its dual histogram: the (sampled) side,
+        the profiles of its candidate columns, and each candidate's name
+        in the join result (the ``<side_name>_<col>`` prefix contract)."""
         op: JoinOp = self.op
-        if consider == "right":
-            return op.right, op.right_name
-        return op.left, op.left_name
+        side_df, side_name = (
+            (op.right, op.right_name) if consider == "right" else (op.left, op.left_name)
+        )
+        side_df = self._maybe_sample(side_df)
+        candidates = self._candidate_columns(side_df, exclude=set(op.on))
+        rename = {c: f"{side_name}_{c}" for c in candidates}
+        return side_df, profile_columns(side_df, candidates), rename
 
     def _explain_join(self, consider: str) -> Explanation:
         op: JoinOp = self.op
-        side_df, side_name = self._join_side(consider)
-        side_df = self._maybe_sample(side_df)
-        candidates = self._candidate_columns(side_df, exclude=set(op.on))
-        profiles = profile_columns(side_df, candidates)
+        side_df, profiles, rename = self._side(consider)
         if not profiles:
             return Explanation(kind="fedex-join", query=op.query_string())
-        rename = {c: f"{side_name}_{c}" for c in candidates}
         hist = dual_histogram_union(side_df, op.result, profiles, self.n_bins, result_rename=rename)
         items, scores = self._score_histogram(hist, profiles, side=consider)
         return Explanation(
@@ -225,66 +209,32 @@ class FedexExplainer(ExplainerBase):
 
     def _explain_shapley(self) -> Explanation:
         """2-player Shapley: each side's value is its own marginal
-        deviation. Both sides' dual histograms come from ONE histogram
-        query, collected once: in full-data mode the weighted flavor
-        (``shapley_dual_histograms_weighted``: each side weighted by the
-        other side's join-key counts, no join result); in sampling mode
-        the union flavor (``shapley_dual_histograms``: the sampled sides
-        against the recorded result). Both run the one dual-histogram
-        kernel of histograms.py; scores, tie-breaks and rendered text come
-        from the same per-(attribute, bin) counts and ``_score_histogram``."""
+        deviation, the side against the recorded join result — the
+        histogram ``_explain_join`` scores for that side. Both sides'
+        histograms come from ONE query, ``shapley_dual_histograms``: the
+        left and right branches plus one result branch binning both
+        sides' columns, collected once, in full-data and sampling mode
+        alike. A semi or anti result holds no right column, so the right
+        side's result counts are all zero and it scores nothing."""
         op: JoinOp = self.op
-        rebuild = not self.use_sampling
+        # the two sides' profile aggregates are independent single-job
+        # pipelines — overlap them (guide §2.6): the second side's scan
+        # back-fills executor slots freed by the first side's tail
+        from concurrent.futures import ThreadPoolExecutor
 
-        def _prep(consider: str, project):
-            side_df, side_name = self._join_side(consider)
-            side_df = self._maybe_sample(side_df)
-            candidates = self._candidate_columns(side_df, exclude=set(op.on))
-            if candidates and rebuild:
-                # the profile agg, the histogram branch, AND the other
-                # side's key-count table all consume this side: the
-                # persisted projection (+ join keys) is filled by the
-                # profile agg below, its first consumer, and every later
-                # job reads cached partitioned blocks instead of
-                # re-decoding a possibly single-partition parquet scan.
-                # Sampling mode already checkpoints inside _maybe_sample.
-                side_df = project(side_df, list(dict.fromkeys(candidates + list(op.on))))
-            profiles = profile_columns(side_df, candidates)
-            rename = {c: f"{side_name}_{c}" for c in candidates}
-            return (side_df, profiles, rename)
-
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            (left_df, lp, lr), (right_df, rp, rr) = pool.map(self._side, ("left", "right"))
         per_side: dict[str, tuple[list, dict]] = {}
-        with _persisted_projections() as project:
-            # the two sides are independent single-job pipelines — overlap
-            # them (guide §2.6): the second side's scan back-fills executor
-            # slots freed by the first side's tail
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut = {c: pool.submit(_prep, c, project) for c in ("left", "right")}
-                prepped = {c: f.result() for c, f in fut.items()}
-            left_df, lp, lr = prepped["left"]
-            right_df, rp, rr = prepped["right"]
-            if lp or rp:
-                if rebuild:
-                    hist = shapley_dual_histograms_weighted(
-                        left_df, right_df, list(op.on), op.how, lp, rp, self.n_bins
-                    )
-                else:
-                    # sampling mode compares SAMPLED sides against the FULL
-                    # recorded result — multiplicity weights of the sample
-                    # would not reproduce that, so it keeps the union flavor
-                    hist = shapley_dual_histograms(
-                        left_df, right_df, op.result, lp, rp, self.n_bins,
-                        left_rename=lr, right_rename=rr,
-                    )
-                for consider, profiles in (("left", lp), ("right", rp)):
-                    prefix = f"{consider}:"
-                    sub = hist[hist["attribute"].str.startswith(prefix)].copy()
-                    sub["attribute"] = sub["attribute"].str[len(prefix):]
-                    per_side[consider] = self._score_histogram(
-                        sub, profiles, side=consider
-                    )
+        if lp or rp:
+            hist = shapley_dual_histograms(
+                left_df, right_df, op.result, lp, rp, self.n_bins,
+                left_rename=lr, right_rename=rr,
+            )
+            for consider, profiles in (("left", lp), ("right", rp)):
+                prefix = f"{consider}:"
+                sub = hist[hist["attribute"].str.startswith(prefix)].copy()
+                sub["attribute"] = sub["attribute"].str[len(prefix):]
+                per_side[consider] = self._score_histogram(sub, profiles, side=consider)
         l_items, l_scores = per_side.get("left", ([], {}))
         r_items, r_scores = per_side.get("right", ([], {}))
         left = Explanation(kind="fedex-join", query=op.query_string(),

@@ -25,16 +25,14 @@ candidate column at once, through ONE kernel, ``_dual_histogram``:
 The exploded stream collapses via map-side partial aggregation to at most
 n_columns * n_bins rows per task, so the shuffle is tiny regardless of
 input size — this is the plan that survives a 100x scale-up (no per-column
-rescans of a 100 TB table). The four public flavors are compositions of
-branches, with weights (src, res[, unmatched]):
+rescans of a 100 TB table). The three public flavors are compositions of
+branches, with weights (src, res):
  * predicate (filters): one branch over the source weighted (1, keep) —
    a single scan, zero extra I/O;
  * union (joins / arbitrary result): the source branch (1, 0) plus the
    result branch (0, 1);
- * Shapley union: the left and right branches (1, 0) plus one result
-   branch (0, 1) binning both sides' columns;
- * Shapley weighted: the left and right branches, each joined to the
-   other side's key counts, weighted (1, w, unmatched) — no join result.
+ * Shapley: the left and right branches (1, 0) plus one result branch
+   (0, 1) binning both sides' columns off the recorded join.
 Result branches bind bin expressions to the result's column names
 (``_pairs``), never by a physical rename.
 
@@ -186,39 +184,31 @@ def _pairs(
     return out
 
 
-def _dual_histogram(
-    branches: list, n_bins: int, names: tuple = ("src_cnt", "res_cnt")
-) -> DataFrame:
+def _dual_histogram(branches: list, n_bins: int) -> DataFrame:
     """The one dual-histogram kernel (module docstring). A branch is
-    ``(frame, pairs, weights)`` or ``(frame, pairs, weights, (counts,
-    on))``: ``frame`` is projected to the columns of ``pairs`` and
+    ``(frame, pairs, weights)``: ``frame`` is projected to the columns of
+    ``pairs`` and the row's ``weights`` (Columns or int literals) and
     fanned out FIRST — the explode fans each row out once per attribute
     and is the CPU bottleneck on a narrow local read; the conditional
     exchange carries only the binned columns and is a no-op on an
     already-wide scan — then exploded to (attribute, bin) rows next to
-    the row's ``weights`` (Columns or int literals). The weights are
-    evaluated in the projection; with ``(counts, on)`` the fanned
-    projection (plus ``on``) is first left-joined to that key-count
-    table and the weights read the joined rows. The histogram groups
-    the union of the branches by (attribute, bin) and sums weight i as
-    ``names[i]``."""
+    the weights. The histogram groups the union of the branches by
+    (attribute, bin) and sums the weights as ``src_cnt`` and
+    ``res_cnt``."""
     from ..operators.partitioning import fan_out
 
     streams = []
-    for df, pairs, weights, *join in branches:
+    for df, pairs, weights in branches:
         cols = list(dict.fromkeys(n for _, n, _ in pairs))
         ws = [(F.lit(w) if isinstance(w, int) else w).alias(f"__w{i}") for i, w in enumerate(weights)]
-        if join:
-            counts, on = join[0]
-            rows = fan_out(df.select(*dict.fromkeys(cols + on))).join(counts, on=on, how="left")
-        else:
-            rows = fan_out(df.select(*cols, *ws))
-            ws = [f"__w{i}" for i in range(len(ws))]
-        streams.append(rows.select(F.explode(_bin_structs(pairs, n_bins)).alias("s"), *ws))
+        rows = fan_out(df.select(*cols, *ws))
+        streams.append(
+            rows.select(F.explode(_bin_structs(pairs, n_bins)).alias("s"), "__w0", "__w1")
+        )
     return (
         reduce(DataFrame.unionByName, streams)
         .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"))
-        .agg(*[F.sum(f"__w{i}").alias(n) for i, n in enumerate(names)])
+        .agg(F.sum("__w0").alias("src_cnt"), F.sum("__w1").alias("res_cnt"))
     )
 
 
@@ -274,123 +264,6 @@ def dual_histogram_union(
     return dual_histogram_union_df(
         source, result, profiles, n_bins, result_rename=result_rename
     ).toPandas()
-
-
-def shapley_dual_histograms_weighted(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    how: str,
-    left_profiles: dict[str, ColumnProfile],
-    right_profiles: dict[str, ColumnProfile],
-    n_bins: int = 20,
-):
-    """Both Shapley players' dual histograms WITHOUT materializing the
-    join result. For an equi-join, a side attribute's value multiset in
-    the result IS the side's own multiset weighted by each row's join
-    multiplicity m(key) (rows of the other side sharing the key) —
-    plus, for outer flavors, one null-extension count landing in the
-    OPPOSITE side's NULL bin per unmatched retained row. So the result
-    branch of ``shapley_dual_histograms`` (a rebuilt join scanned
-    through a third explode) collapses into per-row weights on the two
-    side branches, each joined to the other side's key counts and
-    weighted (1, w, unmatched). Weight w per side row:
-
-      inner          -> m          (unmatched rows vanish)
-      side retained  -> max(m, 1)  (unmatched rows survive once)
-      side dropped   -> m          (left side of a right join, etc.)
-      left semi      -> m > 0      (a matched left row appears once)
-      left anti      -> m == 0     (only unmatched left rows appear)
-
-    A semi or anti result holds no right column, so those joins have no
-    right branch; any other ``how`` raises ``ValueError``.
-
-    This halves the exploded row volume and removes the join shuffle
-    entirely when AQE broadcasts the (key, m) count tables — the
-    100 TB plan is two weighted scans plus two tiny key-count
-    aggregates. Counts are bit-identical to the union flavor (same
-    multiplicities, same null-extension, same bin keys).
-
-    Returns the collected pandas frame (attribute prefixed
-    ``left:``/``right:``), at most (n_left + n_right) * 2 * n_bins rows.
-    """
-    import pandas as pd
-
-    on = list(on)
-    h = (how or "inner").lower().replace("_", "")
-    h = {
-        "cross": "inner", "outer": "full", "fullouter": "full", "leftouter": "left",
-        "rightouter": "right", "leftsemi": "semi", "leftanti": "anti",
-    }.get(h, h)
-    if h not in ("inner", "left", "right", "full", "semi", "anti"):
-        raise ValueError(f"shapley_dual_histograms_weighted: unknown join how={how!r}")
-    l_retained = h in ("left", "full")
-    r_retained = h in ("right", "full")
-
-    lk = left.groupBy(*on).agg(F.count(F.lit(1)).cast("bigint").alias("__m"))
-    rk = right.groupBy(*on).agg(F.count(F.lit(1)).cast("bigint").alias("__m"))
-    m = F.coalesce(F.col("__m"), F.lit(0)).cast("bigint")
-    if h in ("semi", "anti"):
-        l_w = ((m > 0) if h == "semi" else (m == 0)).cast("bigint")
-        right_profiles = {}
-    else:
-        l_w = F.greatest(m, F.lit(1)) if l_retained else m
-    branches = []
-    for df, profiles, other_keys, prefix, w in (
-        (left, left_profiles, rk, "left:", l_w),
-        (right, right_profiles, lk, "right:", F.greatest(m, F.lit(1)) if r_retained else m),
-    ):
-        pairs = _pairs(df, profiles, prefix=prefix)
-        if pairs:
-            # the unmatched-row census rides the same aggregate: summed
-            # over one attribute's bins it is the side's unmatched row
-            # count, which prices the null extension below with ZERO
-            # extra jobs
-            branches.append((df, pairs, (1, w, (m == 0).cast("bigint")), (other_keys, on)))
-    if not branches:
-        return pd.DataFrame(columns=["attribute", "bin", "src_cnt", "res_cnt"])
-    pdf = _dual_histogram(branches, n_bins, ("src_cnt", "res_cnt", "__unmatched")).toPandas()
-
-    def unmatched_of(prefix: str, own_keys: DataFrame, other_keys: DataFrame) -> int:
-        sub = pdf[pdf["attribute"].str.startswith(prefix)]
-        if len(sub):
-            first = sub["attribute"].iloc[0]
-            return int(sub[sub["attribute"] == first]["__unmatched"].sum())
-        # side had no candidate attrs: one tiny aggregate over the two
-        # key-count tables prices its unmatched rows
-        row = (
-            own_keys.join(other_keys.select(*on), on=on, how="left_anti")
-            .agg(F.coalesce(F.sum("__m"), F.lit(0)).alias("n"))
-            .first()
-        )
-        return int(row["n"])
-
-    ext_rows = []
-    # retained-but-unmatched LEFT rows extend the result with NULLs on
-    # the RIGHT side: every right attribute's NULL bin gains that count
-    # (and symmetrically)
-    for retained, prefix_src, own_k, other_k, target_profiles, target_prefix in (
-        (l_retained, "left:", lk, rk, right_profiles, "right:"),
-        (r_retained, "right:", rk, lk, left_profiles, "left:"),
-    ):
-        if not retained or not target_profiles:
-            continue
-        n_ext = unmatched_of(prefix_src, own_k, other_k)
-        if n_ext == 0:
-            continue
-        for c in target_profiles:
-            key = target_prefix + c
-            mask = (pdf["attribute"] == key) & (pdf["bin"] == NULL_TOKEN)
-            if mask.any():
-                pdf.loc[mask, "res_cnt"] = pdf.loc[mask, "res_cnt"] + n_ext
-            else:
-                ext_rows.append(
-                    {"attribute": key, "bin": NULL_TOKEN, "src_cnt": 0,
-                     "res_cnt": n_ext, "__unmatched": 0}
-                )
-    if ext_rows:
-        pdf = pd.concat([pdf, pd.DataFrame(ext_rows)], ignore_index=True)
-    return pdf.drop(columns="__unmatched").reset_index(drop=True)
 
 
 def shapley_dual_histograms(

@@ -648,55 +648,48 @@ def test_reference_named_shims(lineitem):
     assert type(via_class) is type(via_fn)
 
 
-# ------------------------------------------- shapley weighted-histogram parity
-def test_shapley_weighted_histograms_match_union_flavor(spark):
-    """The r12 weighted dual-histogram (result counts = side counts
-    weighted by join-key multiplicity, null extension in the opposite
-    side's NULL bin) must reproduce the rebuilt-join union flavor
-    bit-for-bit on every join type, including NULL keys, NULL values,
-    and multi-match keys. A semi join keeps each matched left row once
-    and an anti join only the unmatched ones; neither result holds a
-    right column, so the weighted flavor has no right attributes. Any
-    other unknown ``how`` raises."""
-    from pd_explain_spark.explainers.histograms import (
-        profile_columns,
-        shapley_dual_histograms,
-        shapley_dual_histograms_weighted,
-    )
+# ------------------------------------------- shapley players vs per-side join explain
+@pytest.mark.parametrize("how", ["inner", "left", "right", "full", "left_semi", "left_anti"])
+def test_shapley_players_score_like_per_side_join_explain(spark, how):
+    """Each Shapley player's value is its own side's deviation against the
+    recorded join, on NULL keys, NULL values and multi-match keys:
+    ``left.*`` scores equal the left-side FEDEX join explanation's and
+    ``right.*`` the right side's. A semi or anti result holds no right
+    column, so it has no ``right.*`` score. With a key-only left side,
+    the left join's unmatched rows still land in the right player's NULL
+    bin."""
+    from pd_explain_spark.explainers.histograms import NULL_TOKEN
 
-    left = spark.createDataFrame(
+    left = to_explainable(spark.createDataFrame(
         [(1, 10.0, "a"), (1, 11.0, "b"), (2, None, "a"), (3, 30.0, None),
          (None, 40.0, "c")] + [(5 + i, float(i), "x") for i in range(20)],
         "k bigint, lv double, lc string",
-    )
-    right = spark.createDataFrame(
+    ), name="l")
+    right = to_explainable(spark.createDataFrame(
         [(1, 100.0), (2, 200.0), (2, 210.0), (4, 400.0), (None, 500.0)]
         + [(5 + i, float(i * 10)) for i in range(10)],
         "k bigint, rv double",
-    )
-    lp = profile_columns(left, ["lv", "lc"])
-    rp = profile_columns(right, ["rv"])
-    for how in ("inner", "left", "right", "full", "left_semi", "semi", "left_anti", "anti"):
-        res = left.selectExpr("k", "lv AS __L_lv", "lc AS __L_lc").join(
-            right.selectExpr("k", "rv AS __R_rv"), on=["k"], how=how
-        )
-        old = shapley_dual_histograms(
-            left, right, res, lp, rp, 20,
-            left_rename={"lv": "__L_lv", "lc": "__L_lc"},
-            right_rename={"rv": "__R_rv"},
-        )
-        new = shapley_dual_histograms_weighted(
-            left, right, ["k"], how, lp, rp, 20
-        )
-        if how.endswith(("semi", "anti")):
-            assert not new["attribute"].str.startswith("right:").any(), how
-            old = old[old["attribute"].str.startswith("left:")]
-        key = ["attribute", "bin"]
-        o = old.groupby(key)[["src_cnt", "res_cnt"]].sum().sort_index()
-        n = new.groupby(key)[["src_cnt", "res_cnt"]].sum().sort_index()
-        assert o.equals(n.astype(o.dtypes.to_dict())), f"how={how} diverged"
-    with pytest.raises(ValueError, match="how"):
-        shapley_dual_histograms_weighted(left, right, ["k"], "sideways", lp, rp, 20)
+    ), name="r")
+    j = left.merge(right, on="k", how=how)
+    sh = j.explain(explainer="shapley", use_sampling=False)
+    for side in ("left", "right"):
+        player = {k.split(".", 1)[1]: v for k, v in sh.scores.items() if k.startswith(side + ".")}
+        assert player == j.explain(consider=side, use_sampling=False).scores, side
+    assert {"left.lv", "left.lc"} <= set(sh.scores)
+    semi_or_anti = how in ("left_semi", "left_anti")
+    assert any(k.startswith("right.") for k in sh.scores) != semi_or_anti
+
+    keys_only = to_explainable(left.df.select("k"), name="l").merge(right, on="k", how=how)
+    sh = keys_only.explain(explainer="shapley", top_k=5, use_sampling=False)
+    assert not any(k.startswith("left.") for k in sh.scores)
+    if semi_or_anti:
+        assert sh.scores == {}
+        return
+    (rv,) = [i for i in sh.items if i.side == "right"]
+    null_share = dict(zip(rv.viz["labels"], rv.viz["res"])).get(NULL_TOKEN, 0.0)
+    res = keys_only.df
+    assert null_share == res.filter(res["r_rv"].isNull()).count() / res.count()
+    assert (null_share > 0) == (how in ("left", "full"))
 
 
 _JOB_GROUPS = itertools.count()
@@ -741,9 +734,7 @@ def test_fan_out_reads_join_width_without_jobs(spark):
 
 
 def test_dual_histogram_job_counts(spark):
-    """Jobs each dual-histogram flavor launches on a small fixture. The
-    weighted flavor's two side branches feed one groupBy, so one
-    shuffle stage for both sides."""
+    """Jobs each dual-histogram flavor launches on a small fixture."""
     from pyspark.sql import functions as F
 
     from pd_explain_spark.explainers.histograms import (
@@ -751,7 +742,6 @@ def test_dual_histogram_job_counts(spark):
         dual_histogram_union,
         profile_columns,
         shapley_dual_histograms,
-        shapley_dual_histograms_weighted,
     )
 
     left = spark.createDataFrame(
@@ -781,14 +771,6 @@ def test_dual_histogram_job_counts(spark):
             ),
             6,
         ),
-        "weighted": (
-            lambda: shapley_dual_histograms_weighted(left, right, ["k"], "left", lp, rp), 8
-        ),
-        # no left candidates: the right side's null extension is priced
-        # by the key-count anti-join fallback
-        "weighted_no_left": (
-            lambda: shapley_dual_histograms_weighted(left, right, ["k"], "left", {}, rp), 10
-        ),
     }
     got = {name: _job_count(spark, fn) for name, (fn, _) in cases.items()}
     assert got == {name: want for name, (_, want) in cases.items()}
@@ -805,25 +787,3 @@ def test_shapley_filter_samples_the_source_once(spark, lineitem):
         spark, lambda: out.explain(explainer="shapley", use_sampling=True)
     )
     assert shapley == fedex + 1
-
-
-def test_shapley_weighted_histograms_one_side_without_candidates(spark):
-    """When a side has no candidate columns, the opposite side's null
-    extension is priced by the key-count anti-join fallback."""
-    from pd_explain_spark.explainers.histograms import (
-        NULL_TOKEN,
-        profile_columns,
-        shapley_dual_histograms_weighted,
-    )
-
-    left = spark.createDataFrame(
-        [(i,) for i in range(10)] + [(100,), (101,)], "k bigint"
-    )
-    right = spark.createDataFrame(
-        [(i, float(i)) for i in range(10)], "k bigint, rv double"
-    )
-    rp = profile_columns(right, ["rv"])
-    pdf = shapley_dual_histograms_weighted(left, right, ["k"], "left", {}, rp, 20)
-    null_bin = pdf[(pdf["bin"] == NULL_TOKEN)]
-    # 2 unmatched retained left rows -> rv's NULL bin gains res_cnt 2
-    assert int(null_bin["res_cnt"].sum()) == 2
